@@ -47,21 +47,33 @@ object FarmSchema {
   val requiredKeys: Seq[String] =
     Seq("event_id", "timestamp", "sensor_data", "weather_data", "location")
 
-  /** Top-level-key presence test. Needed because `from_json` cannot
-    * distinguish an absent key from an explicit null value, but the
-    * reference's missing_top_level_key error can (lamda.py:84:
-    * `if key not in data`). Uses `json_object_keys` — exact top-level
-    * semantics; a regex text probe would also match the key name
-    * nested inside another object. Repeated calls over the same row
-    * collapse to one parse via Catalyst subexpression elimination.
+  /** Top-level keys of the raw payload, for key-presence tests. Needed
+    * because `from_json` cannot distinguish an absent key from an
+    * explicit null value, but the reference's missing_top_level_key
+    * error can (lamda.py:84: `if key not in data`). Uses
+    * `json_object_keys` — exact top-level semantics; a regex text probe
+    * would also match the key name nested inside another object.
+    *
+    * Each use is a full parse of the record, and repeated uses are not
+    * shared: subexpression elimination does not look inside CASE
+    * branches or an interpreted (`CodegenFallback`) expression such as
+    * `filter` over an `array`, which is where the validator's checks
+    * sit. Project it once into a column and test that column with
+    * [[keyPresent]]; `CollapseProject` does not inline a non-cheap
+    * producer that is referenced more than once, so the single parse
+    * survives optimization.
     */
-  def keyPresent(raw: Column, key: String): Column =
-    array_contains(json_object_keys(raw), key)
+  def topLevelKeys(raw: Column): Column = json_object_keys(raw)
+
+  /** Key-presence test over a [[topLevelKeys]] column. */
+  def keyPresent(keys: Column, key: String): Column = array_contains(keys, key)
 
   /** True when the sensor value arrived as a *quoted* JSON string — the
     * condition for the reference's type-converted warning
     * (lamda.py:109-114: `not isinstance(val, (int, float))`). The parsed
-    * MAP<STRING,STRING> loses quotedness, so test the raw text.
+    * MAP<STRING,STRING> loses quotedness, so test the raw text. A regex
+    * scan of the whole record: project it once per sensor, as
+    * [[topLevelKeys]].
     */
   def wasQuoted(raw: Column, sensor: String): Column =
     raw.rlike("\"" + sensor + "\"\\s*:\\s*\"")

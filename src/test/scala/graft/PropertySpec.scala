@@ -1,6 +1,7 @@
 package graft
 
-import graft.rules.Validation
+import graft.gen.FarmProducer
+import graft.rules.{Alerts, Validation}
 import graft.schema.FarmSchema
 import graft.stream.Throttle
 import org.apache.spark.sql.Row
@@ -22,9 +23,12 @@ class PropertySpec extends AnyFunSuite {
   // ── generators for dirty sensor payloads ───────────────────────────
   private val dirtyToken: Gen[String] = Gen.oneOf(
     Gen.choose(-10000.0, 10000.0).map(d => f"$d%.2f"),
-    Gen.oneOf("0", "9999", "-9999"),
-    Gen.oneOf("\"0\"", "\"9999\"", "\"NaN\"", "\"NULL\"", "\"null\"", "\"FAIL\"",
-      "\"25.5\"", "\"0.0\"", "null"),
+    Gen.oneOf("0", "9999", "-9999", "-0", "1e3"),
+    Gen.oneOf("\"0\"", "\"9999\"", "\"-9999\"", "\"NaN\"", "\"NULL\"", "\"null\"",
+      "\"FAIL\"", "\"25.5\"", "\"0.0\"", "\" 25\"", "null"),
+    // JSON booleans: unquoted ones are Python ints (False == 0), quoted
+    // ones are uncoercible strings
+    Gen.oneOf("true", "false", "\"true\"", "\"false\""),
     Gen.choose(0, 60).map(_.toString))
 
   private val dirtySensors: Gen[Seq[(String, String)]] =
@@ -33,12 +37,29 @@ class PropertySpec extends AnyFunSuite {
         Gen.frequency(9 -> dirtyToken, 1 -> Gen.const("null")).map(k -> _)
       })
 
-  private val dirtyRecord: Gen[String] = for {
+  /** Dirty sensors with a random subset of the keys dropped. */
+  private val partialSensors: Gen[Seq[(String, String)]] = for {
+    sensors <- dirtySensors
+    keep <- Gen.listOfN(sensors.size, Gen.oneOf(true, false))
+  } yield sensors.zip(keep).collect { case (kv, true) => kv }
+
+  private val dirtyObject: Gen[String] = for {
     loc <- Gen.oneOf(Some("loc_1"), Some("loc_2"), Some("loc_3"),
-      Some("loc_9"), None)
-    sensors <- Gen.oneOf(dirtySensors, Gen.const(Seq.empty[(String, String)]))
+      Some("loc_9"), Some(""), None)
+    sensors <- Gen.frequency(3 -> dirtySensors, 1 -> partialSensors,
+      1 -> Gen.const(Seq.empty[(String, String)]))
     weather <- Gen.oneOf(Some("31.0"), Some("-5.0"), None)
-  } yield FarmFixtures.record(locId = loc, sensors = sensors, weatherTemp = weather)
+    weatherNull <- Gen.frequency(5 -> false, 1 -> true)
+  } yield {
+    val rec = FarmFixtures.record(locId = loc, sensors = sensors, weatherTemp = weather)
+    // `"weather_data": null` is present-but-null, unlike a dropped key
+    if (weatherNull && weather.isEmpty) rec.dropRight(1) + """, "weather_data": null}"""
+    else rec
+  }
+
+  private val dirtyRecord: Gen[String] = Gen.frequency(
+    19 -> dirtyObject,
+    1 -> Gen.oneOf("[1,2]", "42", "{"))
 
   private def sample(n: Int, gen: Gen[String]): Seq[String] =
     (0 until n).flatMap(i => gen.apply(Gen.Parameters.default, Seed(42L + i)))
@@ -59,6 +80,30 @@ class PropertySpec extends AnyFunSuite {
       assert((status == "WARNING") === (errs.isEmpty && warns.nonEmpty))
       assert((status == "VALID") === (errs.isEmpty && warns.isEmpty))
     }
+  }
+
+  test("validator + alerts digest is pinned over dirty and producer records") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{col, count, lit, struct, sum, to_json, xxhash64}
+    // order-independent: each row hashes its own raw payload together
+    // with everything the record path derives from it, and the hashes
+    // are summed exactly. The expected value was computed with the
+    // validator's earlier single-projection form, so any rewrite must
+    // reproduce it byte for byte.
+    val producer = FarmProducer.records(spark, 5000, seed = 1L)
+      .collect().map(_.getString(0)).toSeq
+    val raws = sample(2000, dirtyRecord) ++ producer
+    val out = Alerts.derive(
+      Validation.annotate(FarmSchema.parse(raws.toDF("raw"), "raw")))
+    val derived = Seq("validation_status", "validation_errors", "validation_warnings") ++
+      FarmSchema.sensorFields.map(s => s"sensor_$s") :+ "alerts"
+    val row = out.select(
+        sum(xxhash64(col("raw"), to_json(struct(derived.map(col): _*)))
+          .cast("decimal(38,0)")),
+        count(lit(1)))
+      .head()
+    assert(row.getLong(1) === 7000L)
+    assert(row.getDecimal(0).toString === "1401786317237140745753")
   }
 
   test("flatten output has no nested types and stable underscore names") {

@@ -4,6 +4,7 @@ import org.apache.spark.sql.Row
 import org.scalatest.funsuite.AnyFunSuite
 import graft.rules.Validation
 import graft.schema.FarmSchema
+import graft.stream.IngestStream
 
 /** Validator semantics P1–P8 against the reference's fault taxonomy
   * (`Lambda/lamda.py:60-150`; cases from FIXTURES.md §A). Each case is
@@ -163,5 +164,35 @@ class ValidationSpec extends AnyFunSuite {
     val rows = annotate(raws: _*)
     assert(rows.size === 60)
     assert(rows.forall(r => Set("VALID", "WARNING", "INVALID")(r.getString(0))))
+  }
+
+  test("staged plan: one key-set parse, one quotedness probe per sensor, no _v* leak") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.expressions.{Expression, JsonObjectKeys, RLike}
+    import org.apache.spark.sql.catalyst.expressions.json.JsonExpressionUtils
+    import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+    // an RDD source, not a local Seq: the optimizer folds a projection
+    // over a local relation into constants, which would leave no plan
+    val raw = spark.sparkContext.parallelize(Seq(record())).toDF("raw")
+    // every expression node of every plan node, counted with repeats:
+    // an inlined producer shows up once per use
+    val exprs: Seq[Expression] = IngestStream.process(raw).queryExecution.optimizedPlan
+      .collect { case p => p.expressions }.flatten.flatMap(_.collect { case e => e })
+    val rlikes = exprs.count(_.isInstanceOf[RLike])
+    val keyParses = exprs.count {
+      case _: JsonObjectKeys => true
+      case s: StaticInvoke =>
+        s.staticObject == classOf[JsonExpressionUtils] && s.functionName == "jsonObjectKeys"
+      case _ => false
+    }
+    assert(rlikes === FarmSchema.sensorFields.size, "one wasQuoted probe per sensor")
+    assert(keyParses === 1, "one json_object_keys parse per record")
+
+    val parsed = FarmSchema.parse(raw, "raw")
+    val cols = Validation.annotate(parsed).columns.toSeq
+    assert(cols === parsed.columns.toSeq ++
+      Seq("validation_errors", "validation_warnings", "validation_status") ++
+      FarmSchema.sensorFields.map(s => s"sensor_$s"), "no internal _v* column leaks out")
   }
 }
