@@ -167,7 +167,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // Host-state sampled at start AND end: the r8 driver-protocol bench
     // read 130.7 s — 1.7× the clean-host number — because it ran minutes
     // after a 453 s test suite on the same box. The number itself can't
@@ -180,7 +179,7 @@ object Bench {
     // workload: contention only ever ADDS time, so the min converges on
     // the true cost. N is in the JSON so readers know what they got.
     val repeats = sys.env.getOrElse("SPARK_GRAFT_REPEATS", "3").toInt max 1
-    val spark = GraftSession.local(cpus)
+    val spark = GraftSession.local()
     // Bench action: write to the noop sink, not count(). Catalyst prunes
     // unreferenced projections under count(), so pure-projection queries
     // would be timed as bare scans; the noop sink evaluates every output
@@ -239,31 +238,10 @@ object Bench {
       name -> (if (good.nonEmpty) good else Seq(timed.map(_._1).min))
     }.toMap
     val results = resultTimes.view.mapValues(_.head).toMap
-    // SPARK_GRAFT_WARMPASS=1: after the measured (cold-ish) pass, run
-    // the whole registry ONCE more in the same JVM/session and report
-    // that total too. This is the like-for-like pair that settles the
-    // cold-driver vs warm-in-session methodology gap (r6 judge measured
-    // 62.8 s warm where the driver-protocol clean run read 83.2 s):
-    // same code, same host, same JVM policy — the delta between
-    // "total" and "warm_pass_total" IS the methodology difference
-    // (fully-warmed JIT across the registry + OS page cache), not a
-    // code trend.
-    val warmTotal =
-      if (sys.env.get("SPARK_GRAFT_WARMPASS").exists(_ == "1")) {
-        val t = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-          val t0 = System.nanoTime()
-          try run(fn, sfDir) catch { case _: Throwable => () }
-          val dt = (System.nanoTime() - t0) / 1e9
-          CacheScope.drain(blocking = true); spark.catalog.clearCache()
-          dt
-        }.sum
-        Some(t)
-      } else None
     val qs = results.map { case (k, v) => s"${Json.str(k)}:$v" }
       .mkString("{", ",", "}")
     val errs = failed.map(Json.str).mkString("[", ",", "]")
     val total = if (results.nonEmpty) results.values.sum else 0.0
-    val warmField = warmTotal.map(t => s""","warm_pass_total":$t""").getOrElse("")
     val loadEnd = loadAvg1m(); val jvmsEnd = otherJvms()
     // Self-normalization (r9 ask #7): per-run host-speed denominator so
     // per-query deltas across rounds are adjudicable mechanically —
@@ -334,7 +312,7 @@ object Bench {
       s""","clean_band_sec":[${CleanBandSec._1},${CleanBandSec._2}]""" +
       s""","clean_band_queries":$CleanBandQueries,"envelope_verdict":${Json.str(verdict)}""" +
       normField
-    val fullLine = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":${Json.str(sfDir)},"errors":$errs,"action":"noop-sink","repeats":$repeats$warmField$hostField,"note":"per-query time is the MIN over 'repeats' in-JVM runs (contention-robust); r3 switched the action from count() to a noop sink so projections actually evaluate"}"""
+    val fullLine = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":${Json.str(sfDir)},"errors":$errs,"action":"noop-sink","repeats":$repeats$hostField,"note":"per-query time is the MIN over 'repeats' in-JVM runs (contention-robust); r3 switched the action from count() to a noop sink so projections actually evaluate"}"""
     println(fullLine)
     // The driver stores only the TAIL of stdout (~2000 chars), and the
     // 174-entry per-query dict pushes the full line's head out of it —
@@ -350,7 +328,7 @@ object Bench {
       java.nio.file.Files.write(p, (fullLine + "\n").getBytes("UTF-8"))
       p.toString
     } catch { case e: Exception => s"unwritable: ${e.getMessage}" }
-    println(s"""{"metric":"total_compact","value":$total,"unit":"sec","n_queries":${results.size},"sf":${Json.str(sfDir)},"errors":$errs,"repeats":$repeats$warmField$hostField,"full_json":${Json.str(fullPath)}}""")
+    println(s"""{"metric":"total_compact","value":$total,"unit":"sec","n_queries":${results.size},"sf":${Json.str(sfDir)},"errors":$errs,"repeats":$repeats$hostField,"full_json":${Json.str(fullPath)}}""")
     spark.stop()
   }
 }

@@ -33,7 +33,7 @@ object ClusteredGen {
     val k = args.lift(2).map(_.toInt).getOrElse(32)
     val sigma = args.lift(3).map(_.toInt).getOrElse(80) / 1000.0
     val amp = args.lift(4).map(_.toInt).getOrElse(350) / 1000.0
-    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = GraftSession.local()
 
     def u(seed: String, mod: Long): String =
       // hash-derived uniform in (0, 1]: +1 keeps ln() off zero

@@ -34,7 +34,7 @@ object CurationStreamBench {
     val dir = args.lift(0).getOrElse("/root/testdata/sf0.1")
     if (args.lift(1).contains("refresh")) { refreshArm(dir); return }
     val perTrigger = args.lift(1).map(_.toInt).getOrElse(4)
-    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = GraftSession.local()
 
     val root = Files.createTempDirectory("graft_curbench").toString
     // persist: setup consumes the corpus four times (count, re-shard
@@ -167,7 +167,7 @@ object CurationStreamBench {
     */
   private def refreshArm(dir: String): Unit = {
     import graft.ext.Similarity
-    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = GraftSession.local()
     graft.functions.VectorExpressions.register(spark)
     val qv = Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("label"), expr(Similarity.qeSpark).as("qe"))

@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** One place to build the engine's SparkSession so every entry point
-  * (Verify, Bench, Smoke, tests) runs with identical semantics.
+  * (Verify, Bench, the soak and streaming mains, tests) runs with
+  * identical semantics.
   *
   * Session-wide flags set here rather than inside loaders (keeps loader
   * behavior call-order independent):
@@ -22,7 +23,14 @@ import org.apache.spark.sql.SparkSession
   *    a real cluster it re-plans skew joins at runtime.
   */
 object GraftSession {
-  def local(cpus: String): SparkSession = {
+  /** Cores a local session runs on: `SPARK_GRAFT_CPUS` (the deployment
+    * setting; "*" means every core), else every core of this host — a
+    * default that never oversubscribes the machine it runs on.
+    */
+  val cores: Int = sys.env.get("SPARK_GRAFT_CPUS").filter(_ != "*")
+    .map(_.toInt).getOrElse(Runtime.getRuntime.availableProcessors())
+
+  def local(cpus: String = cores.toString): SparkSession = {
     // "*" is valid for the master but not as a shuffle-partition count.
     // SPARK_GRAFT_SHUFFLE overrides for partition-sizing experiments
     // (the soak mains' existing dial, honored here too since r17);
@@ -81,9 +89,8 @@ object GraftSession {
       // bypass path only exists for R ≤ 200, and any real cluster job
       // runs hundreds-to-thousands of reduce partitions, i.e. already
       // uses the sort path this pins — the bench now measures the same
-      // writer production would. Env-overridable for A/B.
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BYPASS", "0"))
+      // writer production would.
+      .config("spark.shuffle.sort.bypassMergeThreshold", "0")
       .config("spark.sql.shuffle.partitions", nShuffle)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")

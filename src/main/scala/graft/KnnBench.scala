@@ -46,9 +46,9 @@ object KnnBench {
     val arms = args(1).split(',').map(_.trim).toSeq
     val modArg = args(2)
     val repeats = args.lift(3).map(_.toInt).getOrElse(2)
-    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = GraftSession.local()
     val nShuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE",
-      (2 * Runtime.getRuntime.availableProcessors()).toString)
+      (2 * GraftSession.cores).toString)
     spark.conf.set("spark.sql.shuffle.partitions", nShuffle)
 
     for (dir <- dirs) {

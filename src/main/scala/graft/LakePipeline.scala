@@ -67,9 +67,9 @@ object LakePipeline {
     val benchDir = args.lift(2).getOrElse("/root/testdata/sf0.001")
     val perTrigger = args.lift(3).map(_.toInt).getOrElse(4)
     val seqLen = args.lift(4).map(_.toInt).getOrElse(2048)
-    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = GraftSession.local()
     val nShuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE",
-      (2 * Runtime.getRuntime.availableProcessors()).toString)
+      (2 * GraftSession.cores).toString)
     spark.conf.set("spark.sql.shuffle.partitions", nShuffle)
     graft.functions.VectorExpressions.register(spark)
     val root = Files.createTempDirectory("graft_lake").toString

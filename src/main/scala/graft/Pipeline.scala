@@ -76,8 +76,7 @@ object Pipeline {
     val benchDir = args.lift(2).getOrElse("/root/testdata/sf0.001")
     val seqLen = args.lift(3).map(_.toInt).getOrElse(2048)
     val gateMode = args.lift(4).getOrElse("enforce")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.local(cpus)
+    val spark = GraftSession.local()
     run(spark, docsDir, outDir, benchDir, seqLen, gateMode)
     CacheScope.drain()
     spark.stop()
@@ -93,10 +92,7 @@ object Pipeline {
       gateMode: String): Map[String, Long] = {
     require(gateMode == "enforce" || gateMode == "annotate",
       s"gateMode must be enforce|annotate, got '$gateMode'")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val nCores =
-      if (cpus == "*") Runtime.getRuntime.availableProcessors() else cpus.toInt
-    val nShuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", (2 * nCores).toString)
+    val nShuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", (2 * GraftSession.cores).toString)
     spark.conf.set("spark.sql.shuffle.partitions", nShuffle)
     graft.functions.VectorExpressions.register(spark)
 

@@ -23,7 +23,7 @@ object QProf {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = if (args.length > 1) args.tail.toSeq else Seq("q01_pricing_summary")
-    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = GraftSession.local()
 
     case class J(start: Long, var end: Long = -1L, var tasks: Int = 0,
       var taskMs: Long = 0L, var gcMs: Long = 0L, var cpuMs: Long = 0L)

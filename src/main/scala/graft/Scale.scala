@@ -53,17 +53,14 @@ object Scale {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val names = args.lift(1).map(_.split(',').toSeq).getOrElse(hot)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.local(cpus)
+    val spark = GraftSession.local()
     // The 64p rule as code (r10 SCALE.md §1 sweep, shipped r11): the
     // banding/inverted-index family zero-spills at tasks ≈ 2× cores
     // when memory is data-sized — 64p beat both 32p (8.9 GB spill on
     // q127 ×1000) and 128p (4–6× locality cost) — so the SOAK defaults
     // to 2× cores instead of GraftSession's cores-sized bench default.
     // SPARK_GRAFT_SHUFFLE still overrides for sizing experiments.
-    val nCores =
-      if (cpus == "*") Runtime.getRuntime.availableProcessors() else cpus.toInt
-    val nShuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", (2 * nCores).toString)
+    val nShuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", (2 * GraftSession.cores).toString)
     spark.conf.set("spark.sql.shuffle.partitions", nShuffle)
 
     val shufRead = new AtomicLong; val shufWrite = new AtomicLong
@@ -141,7 +138,7 @@ object Scale {
     // pinned to the anchor's cores-sized partition config (r11 ADVICE
     // ×2 and ask #4; see HostCal's scaladoc). Stamped on every soak
     // line below; -1 disabled, -2 poisoned.
-    val hostSpeed = HostCal.measure(spark, nCores, nShuffle)
+    val hostSpeed = HostCal.measure(spark, GraftSession.cores, nShuffle)
     // drain straggler warmup task-end events before the first measured
     // reset (r6 ADVICE: without this, warmup stragglers pollute the
     // first query's numbers). waitUntilEmpty is the REAL drain — the

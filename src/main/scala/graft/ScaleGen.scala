@@ -58,7 +58,7 @@ object ScaleGen {
     val mode = args.lift(3).getOrElse("disjoint")
     require(mode == "disjoint" || mode == "stopsafe",
       s"mode must be disjoint|stopsafe, got '$mode'")
-    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = GraftSession.local()
     val copyDf = spark.range(copies).select(col("id").as("copy"))
 
     val suffixed =

@@ -37,7 +37,7 @@ object StateBench {
     // uploads the delta, snapshots compact in the background)
     val mode = args.lift(4).getOrElse("")
     val tws = mode.startsWith("tws")
-    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = GraftSession.local()
     if (tws) {
       spark.conf.set(
         "spark.sql.streaming.stateStore.providerClass",

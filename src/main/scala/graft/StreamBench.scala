@@ -31,7 +31,7 @@ object StreamBench {
     // HDFS-backed store — the two state-API paths ThrottleSpec proves
     // equivalent, measured head to head
     val tws = args.lift(3).contains("tws")
-    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = GraftSession.local()
     if (tws) {
       spark.conf.set(
         "spark.sql.streaming.stateStore.providerClass",
@@ -63,51 +63,10 @@ object StreamBench {
       f.setLastModified(nowMs - (parts.length - i) * 1000L)
     }
 
-    // Round-10 sink-I/O instrumentation: SPARK_GRAFT_LAKE_CODEC=gzip
-    // compresses the JSON lake (default: raw, the reference's S3
-    // byte-shape) — the A/B lever for the 10M outlier-batch root-cause;
-    // SPARK_GRAFT_HOST_IO=1 samples /proc/meminfo Dirty/Writeback and
-    // /proc/diskstats sectors-written every 5 s so a sink-write stall
-    // is attributable to kernel writeback, not guessed.
-    val lakeCodec = sys.env.get("SPARK_GRAFT_LAKE_CODEC")
-    if (sys.env.contains("SPARK_GRAFT_HOST_IO")) {
-      // the disk to track writeback on is host-specific; default to this
-      // sandbox's root device but take an override so disk_written_mb
-      // doesn't silently read -1 elsewhere
-      val diskDev = sys.env.getOrElse("SPARK_GRAFT_HOST_IO_DEV", "vda")
-      // Files.readAllLines opens-reads-closes in one call — the
-      // scala.io.Source form leaked two fds per 5 s tick for the life
-      // of the soak (sources were never closed)
-      def procLines(p: String): Seq[String] = {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.readAllLines(java.nio.file.Paths.get(p)).asScala.toSeq
-      }
-      val th = new Thread(() => {
-        val t0io = System.nanoTime()
-        while (true) {
-          try {
-            val mi = procLines("/proc/meminfo")
-              .filter(l => l.startsWith("Dirty:") || l.startsWith("Writeback:"))
-              .map(_.split("\\s+")).map(a => a(0).dropRight(1) -> a(1).toLong).toMap
-            val ds = procLines("/proc/diskstats")
-              .map(_.trim.split("\\s+")).find(a => a(2) == diskDev)
-            val wrMb = ds.map(a => a(9).toLong * 512L / 1048576L).getOrElse(-1L)
-            System.err.println(
-              s"""{"metric":"host_io","t_sec":${(System.nanoTime() - t0io) / 1000000000L},""" +
-                s""""dirty_mb":${mi.getOrElse("Dirty", 0L) / 1024},""" +
-                s""""writeback_mb":${mi.getOrElse("Writeback", 0L) / 1024},""" +
-                s""""disk_written_mb":$wrMb}""")
-          } catch { case _: Throwable => () }
-          Thread.sleep(5000)
-        }
-      })
-      th.setDaemon(true); th.start()
-    }
-
     val t0 = System.nanoTime()
     val (lakeQ, alertQ) = IngestStream.start(
       IngestStream.fileSource(spark, src, Some(perTrigger)),
-      lake, alerts, ckpt, useTransformWithState = tws, lakeCodec = lakeCodec)
+      lake, alerts, ckpt, useTransformWithState = tws)
     lakeQ.awaitTermination()
     val lakeSec = (System.nanoTime() - t0) / 1e9
     alertQ.awaitTermination()
@@ -118,22 +77,22 @@ object StreamBench {
       .map(_.durationMs.get("triggerExecution").toLong).sorted
     def pct(p: Double): Long =
       if (durs.isEmpty) 0L else durs(((durs.length - 1) * p).toInt)
-    if (sys.env.contains("SPARK_GRAFT_STREAM_DEBUG"))
-      (lakeQ.recentProgress ++ alertQ.recentProgress).foreach { p =>
-        // per-batch duration breakdown as a machine-readable line
-        // (STREAM_r10.jsonl raw evidence): addBatch = the sink write +
-        // batch compute; walCommit/commitOffsets = offset-log fsyncs;
-        // stateCommit lives inside addBatch for the stateful query
-        val d = p.durationMs
-        def ms(k: String): Long =
-          Option(d.get(k)).map(_.toLong).getOrElse(-1L)
-        System.err.println(
-          s"""{"metric":"stream_batch","query":"${p.name}","batch":${p.batchId},""" +
-            s""""ts":"${p.timestamp}","rows":${p.numInputRows},""" +
-            s""""trigger_ms":${ms("triggerExecution")},"addbatch_ms":${ms("addBatch")},""" +
-            s""""walcommit_ms":${ms("walCommit")},"commitoffsets_ms":${ms("commitOffsets")},""" +
-            s""""getbatch_ms":${ms("getBatch")},"latestoffset_ms":${ms("latestOffset")}}""")
-      }
+    // per-batch duration breakdown as a machine-readable line, read
+    // from recentProgress after the run (so it costs the run nothing):
+    // addBatch = the sink write + batch compute; walCommit/commitOffsets
+    // = offset-log fsyncs; stateCommit lives inside addBatch for the
+    // stateful query
+    (lakeQ.recentProgress ++ alertQ.recentProgress).foreach { p =>
+      val d = p.durationMs
+      def ms(k: String): Long =
+        Option(d.get(k)).map(_.toLong).getOrElse(-1L)
+      System.err.println(
+        s"""{"metric":"stream_batch","query":"${p.name}","batch":${p.batchId},""" +
+          s""""ts":"${p.timestamp}","rows":${p.numInputRows},""" +
+          s""""trigger_ms":${ms("triggerExecution")},"addbatch_ms":${ms("addBatch")},""" +
+          s""""walcommit_ms":${ms("walCommit")},"commitoffsets_ms":${ms("commitOffsets")},""" +
+          s""""getbatch_ms":${ms("getBatch")},"latestoffset_ms":${ms("latestOffset")}}""")
+    }
 
     val landed = spark.read.json(lake).count()
     val alertRows = spark.read.parquet(alerts).count()
@@ -143,12 +102,8 @@ object StreamBench {
     // measurement itself uncontended). Shares Scale's machinery —
     // HostCal pins/restores the partition config itself.
     val curShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    val nCores = {
-      val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-      if (cpus == "*") Runtime.getRuntime.availableProcessors() else cpus.toInt
-    }
     if (HostCal.enabled) HostCal.warm(spark)
-    val hostSpeed = HostCal.measure(spark, nCores, curShuffle)
+    val hostSpeed = HostCal.measure(spark, GraftSession.cores, curShuffle)
     println(
       s"""{"metric":"stream_ingest","state_api":"${if (tws) "transformWithState+rocksdb" else "fMGWS+hdfs"}","events":$n,"wall_sec":${f"$wallSec%.1f"},""" +
         s""""lake_sec":${f"$lakeSec%.1f"},"events_per_sec":${(n / wallSec).toInt},""" +

@@ -9,8 +9,7 @@ object Verify {
     // optional 3rd arg: comma-separated query-name filter, for fast
     // local iteration on a subset (the driver always passes 2 args)
     val only = args.lift(2).map(_.split(',').toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.local(cpus)
+    val spark = GraftSession.local()
     new java.io.File(outDir).mkdirs()
     // schema-drift tripwire: if the driver regenerated the testdata with
     // a different encoding, name the column ONCE up front instead of

@@ -89,7 +89,7 @@ object DashboardParity {
     val n = args.lift(0).map(_.toLong).getOrElse(2480L)
     val faultPct = args.lift(1).map(_.toInt).getOrElse(10)
     val alertPct = args.lift(2).map(_.toInt).getOrElse(15)
-    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
+    val spark = GraftSession.local()
     val dir = Files.createTempDirectory("dash_parity").toString
 
     val tl = compute(spark, dir, n, faultPct, alertPct)

@@ -60,7 +60,7 @@ object StarSchema {
     * eager (the counting job runs when a dim builder is called) and the
     * sort is computed twice (count pass + data pass) — two parallel
     * passes in exchange for removing the single-reducer global window
-    * that dies first at 100×.
+    * that dies first at 100×. SurrogateIdSpec pins the contract.
     */
   private[graft] def orderedIds(
       fresh: DataFrame, keyName: String, orderCols: Seq[String], base: Long): DataFrame = {
@@ -74,51 +74,6 @@ object StarSchema {
     }
     spark.createDataFrame(indexed,
       sorted.schema.add(keyName, org.apache.spark.sql.types.LongType, nullable = false))
-  }
-
-  /** [[orderedIds]] without leaving the DataFrame domain (r8 VERDICT
-    * ask #6): same range-partitioned parallel sort, then
-    * `monotonically_increasing_id()` — whose bit layout
-    * (pid << 33 | offset-within-partition) makes contiguous global ids
-    * a per-partition offset add: one tiny pid-count aggregation
-    * (map-side combined to ≤1 row per pid per task), offsets
-    * broadcast-joined back, ids = base + offset(pid) + low bits.
-    * Rows stay in Tungsten (no Row re-serialization through an RDD),
-    * at the cost of persisting the stamped sort: the offsets pass and
-    * the data pass MUST read the same range boundaries, and an
-    * unpersisted re-execution would re-sample them (fresh RDD id →
-    * fresh sampling seed — the same determinism hazard the
-    * zipWithIndex note documents). Stage retries recompute the same
-    * RDD id, so recovery keeps the boundary contract. Lifetime: the
-    * cache is [[graft.CacheScope]]-scoped, dropped by the runner after
-    * the caller's action (Q's cache contract). SurrogateIdSpec proves
-    * id-for-id equality with [[orderedIds]]; the measured A/B at ×100
-    * is in SCALE.md (both forms are two parallel passes — the contest
-    * is Tungsten-vs-RDD per-row cost against the cache write).
-    */
-  private[graft] def orderedIdsDF(
-      fresh: DataFrame, keyName: String, orderCols: Seq[String], base: Long): DataFrame = {
-    val spark = fresh.sparkSession
-    val nParts = spark.sessionState.conf.numShufflePartitions
-    val stamped = graft.CacheScope.scoped(fresh
-      .repartitionByRange(nParts, orderCols.map(col): _*)
-      .sortWithinPartitions(orderCols.map(col): _*)
-      .withColumn("_mid", monotonically_increasing_id()))
-    val counts = stamped
-      .select(shiftright(col("_mid"), 33).as("_pid"))
-      .groupBy("_pid").agg(count(lit(1)).as("_cnt"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
-    val offsets = counts.scanLeft((0L, 0L)) {
-      case ((_, acc), (pid, cnt)) => (pid, acc + cnt)
-    }.init.zip(counts).map { case ((_, off), (pid, _)) => (pid, off) }
-    import spark.implicits._
-    val offDf = offsets.toSeq.toDF("_pid", "_off")
-    stamped
-      .withColumn("_pid", shiftright(col("_mid"), 33))
-      .join(broadcast(offDf), "_pid")
-      .withColumn(keyName,
-        lit(base + 1L) + col("_off") + (col("_mid").bitwiseAND((1L << 33) - 1)))
-      .drop("_pid", "_mid", "_off")
   }
 
   /** DISTINCT + NOT-NULL candidates, minus rows already in `existing`

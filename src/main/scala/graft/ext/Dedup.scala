@@ -57,27 +57,8 @@ object Dedup {
     // SCALE.md). Docs under 5 tokens hash to null and explode to no
     // rows — the old size(_toks) >= 5 filter, for free.
     graft.functions.VectorExpressions.register(docs.sparkSession)
-    if (Dedup.shingleKernelOff)
-      // portable HOF chain, kept verbatim for kernel on/off task-second
-      // A/Bs (SCALE.md §1's attribution table) — KernelSpec proves the
-      // two forms emit identical rows
-      docs.select(head :+ expr("split(text, ' ')").as("_toks"): _*)
-        .filter(size(col("_toks")) >= 5)
-        .select(head :+ explode(expr(
-          "array_distinct(transform(sequence(1, size(_toks) - 4), " +
-            s"i -> ${Portable.h60Spark("array_join(slice(_toks, i, 5), ' ')")}))"))
-          .as("sh"): _*)
-    else
-      docs.select(head :+ explode(expr("shingles60(text)")).as("sh"): _*)
+    docs.select(head :+ explode(expr("shingles60(text)")).as("sh"): _*)
   }
-
-  /** `SPARK_GRAFT_SHINGLE_KERNEL=off` switches the shingle generators
-    * back to the interpreted HOF chain — the lever for attributing
-    * kernel CPU savings vs host-window speed in cross-round hot-12
-    * comparisons (read at plan-build time).
-    */
-  private[ext] def shingleKernelOff: Boolean =
-    sys.env.get("SPARK_GRAFT_SHINGLE_KERNEL").contains("off")
 
   /** DuckDB mirror of [[shingles5]] as a CTE body. */
   private[ext] val shingles5Duck =
@@ -686,20 +667,10 @@ object Dedup {
       graft.functions.VectorExpressions.register(s)
       // shingles60_all: the positional compiled kernel (all windows, in
       // order — posexplode recovers i); <5-token docs hash to null and
-      // explode to no rows, replacing the size guard. Same kernel
-      // on/off lever as shinglesOf for the A/B.
-      val psh = (if (Dedup.shingleKernelOff)
-        Tables.documents(s, d)
-          .select(col("doc_id"), expr("split(text, ' ')").as("_toks"))
-          .filter(size(col("_toks")) >= 5)
-          .select(col("doc_id"), posexplode(expr(
-            "transform(sequence(1, size(_toks) - 4), " +
-              s"i -> ${Portable.h60Spark("array_join(slice(_toks, i, 5), ' ')")})"))
-            .as(Seq("pos", "sh")))
-      else
-        Tables.documents(s, d)
-          .select(col("doc_id"),
-            posexplode(expr("shingles60_all(text)")).as(Seq("pos", "sh"))))
+      // explode to no rows, replacing the size guard.
+      val psh = Tables.documents(s, d)
+        .select(col("doc_id"),
+          posexplode(expr("shingles60_all(text)")).as(Seq("pos", "sh")))
         .select(col("doc_id"), (col("pos") + 1).as("i"), col("sh"))
         .transform(CacheScope.scoped) // two consumers: the dup-set count and the hits join
       val dup = psh.groupBy("sh")

@@ -33,15 +33,10 @@ object TextAnalysis {
   /** `text_stats(text, <set>)` call for a quoted stop-set — one fused
     * codegen pass per doc replacing the split/regexp_replace/HOF-filter
     * chain (KernelSpec pins ≡ to the relational form the SQL mirrors
-    * keep). `SPARK_GRAFT_QUALITY_KERNEL=off` switches the quality/
-    * Gopher/langID projections back to the HOF form for task-second
-    * A/Bs (read at plan-build time, like the soak's other levers).
+    * keep).
     */
   private def textStats(quotedSet: String): String =
     s"text_stats(text, '${csv(quotedSet)}')"
-
-  private[ext] def qualityKernelOff: Boolean =
-    sys.env.get("SPARK_GRAFT_QUALITY_KERNEL").contains("off")
 
   /** The langID classifier as a DuckDB SELECT — (doc_id, lang,
     * n_tokens, predicted_lang, best) per doc. ONE definition shared by
@@ -76,12 +71,8 @@ object TextAnalysis {
       s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame = {
     graft.functions.VectorExpressions.register(s)
-    def score(set: String) =
-      if (qualityKernelOff) s"size(filter(split(text, ' '), t -> t IN ($set)))"
-      else s"cast(${textStats(set)}[2] as int)"
-    val nToks =
-      if (qualityKernelOff) "size(split(text, ' '))"
-      else s"cast(${textStats(stopEn)}[0] as int)"
+    def score(set: String) = s"cast(${textStats(set)}[2] as int)"
+    val nToks = s"cast(${textStats(stopEn)}[0] as int)"
     Tables.documents(s, d)
       .select(
         col("doc_id"), col("lang"),
@@ -108,28 +99,18 @@ object TextAnalysis {
     * here changes both surfaces together — they must not drift.
     */
   private[graft] def gopherFeatures(
-      docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    if (qualityKernelOff)
-      // portable HOF form, kept verbatim for kernel on/off A/Bs
-      docs
-        .withColumn("n_tokens", expr("size(split(text, ' '))"))
-        .withColumn("chars", expr("length(text) - (n_tokens - 1)"))
-        .withColumn("punct",
-          expr("length(text) - length(regexp_replace(text, '[^a-z0-9 ]', ''))"))
-        .withColumn("stops",
-          expr(s"size(filter(split(text, ' '), t -> t IN ($stopAll)))"))
-    else {
-      graft.functions.VectorExpressions.register(docs.sparkSession)
-      docs
-        .withColumn("_ts", expr(textStats(stopAll)))
-        .withColumn("n_tokens", expr("cast(_ts[0] as int)"))
-        // single-space-separated text: chars = length minus the
-        // n_tokens-1 separators, without a second regex pass
-        .withColumn("chars", expr("length(text) - (n_tokens - 1)"))
-        .withColumn("punct", expr("cast(_ts[1] as int)"))
-        .withColumn("stops", expr("cast(_ts[2] as int)"))
-        .drop("_ts")
-    }
+      docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    graft.functions.VectorExpressions.register(docs.sparkSession)
+    docs
+      .withColumn("_ts", expr(textStats(stopAll)))
+      .withColumn("n_tokens", expr("cast(_ts[0] as int)"))
+      // single-space-separated text: chars = length minus the
+      // n_tokens-1 separators, without a second regex pass
+      .withColumn("chars", expr("length(text) - (n_tokens - 1)"))
+      .withColumn("punct", expr("cast(_ts[1] as int)"))
+      .withColumn("stops", expr("cast(_ts[2] as int)"))
+      .drop("_ts")
+  }
 
   private[graft] val gopherRules: Seq[(String, String)] = Seq(
     "doc_length" -> "n_tokens BETWEEN 50 AND 100000",
@@ -168,25 +149,16 @@ object TextAnalysis {
     * interpreted split/regexp/filter, ~1.5 ms/doc).
     */
   private[ext] def qualityFeatures(
-      s: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame =
-    if (qualityKernelOff)
-      // portable HOF form, kept verbatim for kernel on/off A/Bs
-      Tables.documents(s, d)
-        .select(
-          col("doc_id"), col("n_chars"),
-          expr("size(split(text, ' '))").as("n_tokens"),
-          expr("length(text) - length(regexp_replace(text, '[^a-z0-9 ]', ''))").as("punct"),
-          expr(s"size(filter(split(text, ' '), t -> t IN ($stopEn)))").as("stops"))
-    else {
-      graft.functions.VectorExpressions.register(s)
-      Tables.documents(s, d)
-        .select(col("doc_id"), col("n_chars"), expr(textStats(stopEn)).as("_ts"))
-        .select(
-          col("doc_id"), col("n_chars"),
-          expr("cast(_ts[0] as int)").as("n_tokens"),
-          expr("cast(_ts[1] as int)").as("punct"),
-          expr("cast(_ts[2] as int)").as("stops"))
-    }
+      s: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame = {
+    graft.functions.VectorExpressions.register(s)
+    Tables.documents(s, d)
+      .select(col("doc_id"), col("n_chars"), expr(textStats(stopEn)).as("_ts"))
+      .select(
+        col("doc_id"), col("n_chars"),
+        expr("cast(_ts[0] as int)").as("n_tokens"),
+        expr("cast(_ts[1] as int)").as("punct"),
+        expr("cast(_ts[2] as int)").as("stops"))
+  }
 
   val all: Seq[Q] = Seq(
     // ── Token counting: whitespace tokens + a BPE-ish regex pass ───────

@@ -780,110 +780,6 @@ object Simhash128 {
   }
 }
 
-/** CANDIDATE 128-bit SimHash kernel for the r11 verdict ask #2 A/B:
-  * same shingle walk and vote/output contract as [[Simhash128]], but
-  * the per-shingle hash replaces md5 with a multiply-shift family —
-  * a wrapping poly-31 hash over the shingle's UTF-16 code units,
-  * then chunk c = the HIGH 32 bits of `h * M(c)` for four fixed odd
-  * 64-bit multipliers (Dietzfelbinger multiply-shift: high bits of an
-  * odd-multiplier product are a universal hash family; the low-bit
-  * weakness of multiply-only mixing never surfaces because only bits
-  * 32–63 are kept). XOR-free BY DESIGN: every step is `+ * >> `,
-  * so a DuckDB oracle can mirror it exactly with HUGEINT mod-2⁶⁴
-  * arithmetic (`%`/`//`), where an xorshift finalizer would have no
-  * HUGEINT mirror. BMP contract: code units = code points for all
-  * test corpora; a production adoption over astral-plane text would
-  * switch the walk to codePointAt on both sides.
-  *
-  * Measured in MixerBench (SCALE.md r12) against the md5 form;
-  * registered as `simhash128mix` for the A/B only — q166–q169 keep
-  * the md5 form unless the A/B justifies migration.
-  */
-case class Simhash128Mix(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == org.apache.spark.sql.types.StringType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"simhash128mix expects string, got ${child.dataType.simpleString}")
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = "simhash128mix"
-
-  protected override def nullSafeEval(str: Any): Any = {
-    val fp = Simhash128Mix.compute(str.toString)
-    if (fp == null) null
-    else new org.apache.spark.sql.catalyst.util.GenericArrayData(fp)
-  }
-
-  protected override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, str => {
-      val fp = ctx.freshName("fpmix")
-      s"""
-         |long[] $fp = graft.functions.Simhash128Mix.compute($str.toString());
-         |if ($fp == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($fp);
-         |}
-       """.stripMargin
-    })
-
-  protected override def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object Simhash128Mix {
-  /** Four fixed odd 64-bit multipliers (distinct golden/byte-mix
-    * constants from the splitmix64/xxhash literature — any odd values
-    * with dense bit patterns work; these are pinned so the oracle
-    * mirror is a constant).
-    */
-  private val M = Array(
-    0x9E3779B97F4A7C15L, 0xC2B2AE3D27D4EB4FL,
-    0x165667B19E3779F9L, 0x27D4EB2F165667C5L)
-
-  def compute(s: String): Array[Long] = {
-    val toks = s.split(" ", -1)
-    val n = toks.length
-    if (n < 3) return null
-    val votes = new Array[Int](128)
-    var i = 0
-    while (i + 2 < n) {
-      // wrapping poly-31 over the 3-token shingle's code units,
-      // single-space joints included — no string materialization at all
-      var h = 0L
-      var t = i
-      while (t <= i + 2) {
-        val tok = toks(t)
-        var p = 0
-        while (p < tok.length) { h = h * 31 + tok.charAt(p); p += 1 }
-        if (t < i + 2) h = h * 31 + ' '
-        t += 1
-      }
-      var c = 0
-      while (c < 4) {
-        val w = (h * M(c)) >>> 32
-        var j = 0
-        while (j < 32) {
-          if (((w >> j) & 1L) == 1L) votes(32 * c + j) += 1
-          else votes(32 * c + j) -= 1
-          j += 1
-        }
-        c += 1
-      }
-      i += 1
-    }
-    val fp = new Array[Long](4)
-    var k = 0
-    while (k < 128) {
-      if (votes(k) >= 0) fp(k / 32) |= (1L << (k % 32))
-      k += 1
-    }
-    fp
-  }
-}
-
 /** Lexical text statistics in ONE fused pass — `array<bigint>` of
   * `[n_tokens, punct, stop_hits]`:
   *
@@ -1015,8 +911,7 @@ object VectorExpressions {
     "shingles60" -> (args => Shingles60(args(0))),
     "shingles60_all" -> (args => Shingles60All(args(0))),
     "text_stats" -> (args => TextStats(args(0), args(1))),
-    "simhash128" -> (args => Simhash128(args(0))),
-    "simhash128mix" -> (args => Simhash128Mix(args(0))))
+    "simhash128" -> (args => Simhash128(args(0))))
 
   /** Register every kernel on the session (idempotent). Called from
     * [[graft.GraftSession]]; query builders also call it defensively so

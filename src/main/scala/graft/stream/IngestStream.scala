@@ -230,8 +230,7 @@ object IngestStream {
       alertPath: String,
       checkpointRoot: String,
       watermarkDelay: String = "10 minutes",
-      useTransformWithState: Boolean = false,
-      lakeCodec: Option[String] = None): (StreamingQuery, StreamingQuery) = {
+      useTransformWithState: Boolean = false): (StreamingQuery, StreamingQuery) = {
     // Per-micro-batch summary counts — the Lambda's batch summary
     // (lamda.py:533-541, SURVEY §2.4 A4) as observable metrics: free
     // (piggybacks the sink pass), surfaced in every
@@ -280,15 +279,9 @@ object IngestStream {
             coalesce(col("event_id"), lit("unknown")) === col("eventId"), "left")
           .drop("eventId")
         try {
-          // Optional lake compression (round 10): default None keeps
-          // the reference's raw-JSON lake byte-shape; StreamBench's
-          // sink-I/O A/B passes gzip (the standard S3 JSON codec; the
-          // text sink does not ship zstd) to bound the single-disk
-          // writeback stall the 10M soak exposed — measured 13 GB →
-          // 0.86 GB lake at −8% throughput (SCALE.md §2 round 10).
-          val w = lakeCodec.foldLeft(out.write.mode("append"))(
-            (wr, c) => wr.option("compression", c))
-          w.partitionBy("route", "loc_id")
+          // uncompressed JSON, the reference's lake byte-shape (a gzip
+          // lake measured −8% throughput, SCALE.md §2 round 10)
+          out.write.mode("append").partitionBy("route", "loc_id")
             .json(lakePath)
         } catch {
           case e: Throwable =>

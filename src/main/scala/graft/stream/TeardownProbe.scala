@@ -15,18 +15,15 @@ import graft.GraftSession
   * probe dies with SIGSEGV (exit 134/139) instead of killing the test
   * suite, and the spec fails on the exit code.
   *
-  * `runMain graft.stream.TeardownProbe [nEvents] [nKeys] [mode]` —
-  * mode `ordered` (default) tears down via [[OrderlyShutdown]]
-  * (queries → StateStore.stop() → spark.stop()); mode `bare` calls
-  * `spark.stop()` directly, the sequence the soak crashed under —
-  * kept for reproduction attempts, not used by the regression test.
+  * `runMain graft.stream.TeardownProbe [nEvents] [nKeys]` tears down
+  * via [[OrderlyShutdown]] (queries → StateStore.stop() →
+  * spark.stop()).
   */
 object TeardownProbe {
   def main(args: Array[String]): Unit = {
     val n = args.lift(0).map(_.toLong).getOrElse(200000L)
     val nKeys = args.lift(1).map(_.toLong).getOrElse(200000L)
-    val mode = args.lift(2).getOrElse("ordered")
-    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
+    val spark = GraftSession.local()
     spark.conf.set(
       "spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
@@ -63,11 +60,11 @@ object TeardownProbe {
     val batches = q.recentProgress.length
     q.stop()
 
-    if (mode == "bare") spark.stop() else OrderlyShutdown.stop(spark)
+    OrderlyShutdown.stop(spark)
     // the soak's crash arrived ~16 s AFTER stop returned, on a native
     // background thread — hold the JVM open long enough for any such
     // straggler to fire inside the probe's observation window
     Thread.sleep(20000L)
-    println(s"""{"metric":"teardown_probe","mode":"$mode","events":$n,"batches":$batches,"clean_exit":true}""")
+    println(s"""{"metric":"teardown_probe","events":$n,"batches":$batches,"clean_exit":true}""")
   }
 }

@@ -166,47 +166,6 @@ class KernelSpec extends AnyFunSuite {
     assert(oob === 0)
   }
 
-  test("simhash128mix ≡ independent mod-2⁶⁴ reference (the DuckDB-HUGEINT mirror math)") {
-    // the mix kernel's contract is pure integer math (poly-31 char fold,
-    // wrapping; chunk c = high 32 bits of h * M(c) mod 2⁶⁴) — proven
-    // here against a BigInt mod-2⁶⁴ reimplementation, i.e. exactly the
-    // arithmetic a DuckDB HUGEINT mirror would run, so this test is
-    // also the portability proof-of-concept (SCALE.md r12 mixer A/B)
-    val M = Seq(0x9E3779B97F4A7C15L, 0xC2B2AE3D27D4EB4FL,
-      0x165667B19E3779F9L, 0x27D4EB2F165667C5L)
-    val MOD = BigInt(1) << 64
-    def ref(s: String): Option[Seq[Long]] = {
-      val toks = s.split(" ", -1)
-      if (toks.length < 3) return None
-      val votes = Array.fill(128)(0)
-      for (i <- 0 until toks.length - 2) {
-        val sh = toks.slice(i, i + 3).mkString(" ")
-        var h = BigInt(0)
-        sh.foreach(ch => h = (h * 31 + ch.toInt) % MOD)
-        for (c <- 0 until 4) {
-          val w = (h * (BigInt(M(c)) & (MOD - 1))) % MOD >> 32
-          for (j <- 0 until 32)
-            if (((w >> j) & 1) == 1) votes(32 * c + j) += 1
-            else votes(32 * c + j) -= 1
-        }
-      }
-      val fp = Array.fill(4)(0L)
-      for (k <- 0 until 128)
-        if (votes(k) >= 0) fp(k / 32) |= (1L << (k % 32))
-      Some(fp.toSeq)
-    }
-    val rows = docs.select(col("doc_id"), col("text"),
-        expr("simhash128mix(text)").as("fp")).collect()
-    assert(rows.nonEmpty)
-    rows.foreach { r =>
-      val expect = ref(r.getString(1))
-      val got = if (r.isNullAt(2)) None else Some(r.getSeq[Long](2))
-      assert(got === expect, s"doc ${r.getLong(0)}")
-      // every chunk stays in [0, 2^32) — the signed-BIGINT-safe range
-      got.foreach(_.foreach(c => assert(c >= 0L && c <= 4294967295L)))
-    }
-  }
-
   test("text_stats ≡ split/regexp_replace/HOF-filter chain on corpus data") {
     val stopEn = "'the','a','of','to','and','is'"
     val mism = docs.select(

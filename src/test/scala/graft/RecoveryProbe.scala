@@ -56,7 +56,7 @@ object RecoveryProbe {
     val mode = args(0)
     val root = args(1)
     val provider = args.lift(2).getOrElse("hdfs")
-    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
+    val spark = GraftSession.local()
     if (provider == "rocksdb") {
       spark.conf.set("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")

@@ -21,6 +21,27 @@ class RegistrySpec extends AnyFunSuite {
     assert(SparkEntry.oracleSql.keySet.subsetOf(SparkEntry.queries.keySet))
   }
 
+  test("query code reads no environment variables") {
+    // query semantics must not depend on the caller's environment:
+    // env-var forks in query code let a run measure or verify a plan
+    // other than the one the registry ships
+    val root = new java.io.File("src/main/scala/graft")
+    assert(root.isDirectory, s"source tree not found under ${root.getAbsolutePath}")
+    def files(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(files)
+      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+    val hits = Seq("ext", "rules", "etl", "schema", "queries", "functions")
+      .flatMap(d => files(new java.io.File(root, d)))
+      .flatMap { f =>
+        val src = scala.io.Source.fromFile(f, "UTF-8")
+        try src.getLines().zipWithIndex.collect {
+          case (l, i) if l.contains("sys.env") || l.contains("System.getenv") =>
+            s"${f.getPath}:${i + 1}"
+        }.toList finally src.close()
+      }
+    assert(hits.isEmpty, s"environment reads in query code: ${hits.mkString(", ")}")
+  }
+
   test("entry() smoke: flagship query returns rows at sf0.001") {
     assert(SparkEntry.entry(spark).count() > 0)
   }

@@ -7,15 +7,15 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Regression fence for the RocksDB teardown SIGSEGV (SCALE.md §2,
   * r8 VERDICT ask #2): tears down a changelog-checkpointed
   * transformWithState query in a FORKED JVM via
-  * [[graft.stream.TeardownProbe]] (ordered mode —
-  * queries → StateStore.stop() → spark.stop()) and asserts a clean
+  * [[graft.stream.TeardownProbe]] (queries → StateStore.stop() →
+  * spark.stop()) and asserts a clean
   * exit. A recurrence of the native crash is an exit code here
   * (SIGSEGV → 134/139), not a killed test suite; the probe holds its
   * JVM open 20 s past stop because the soak's crash arrived ~16 s
   * after `spark.stop()` returned, on a native background thread.
   *
-  * Reproduction status (round 9): bare-mode probes (`spark.stop()`
-  * directly, the sequence the soak crashed under) at 200k and 3×2M
+  * Reproduction status (round 9): probes calling `spark.stop()`
+  * directly (the sequence the soak crashed under) at 200k and 3×2M
   * events all exited clean — the race needs the 10M soak's compaction
   * pressure to fire. The ordered sequence removes the raced window by
   * construction (providers and their JNI loggers close while the JVM
@@ -35,7 +35,7 @@ class RocksDBTeardownSpec extends AnyFunSuite {
     val cmd = Seq(javaBin) ++ opens ++ Seq(
       "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
       "-Xmx3g", "-cp", cp,
-      "graft.stream.TeardownProbe", "100000", "100000", "ordered")
+      "graft.stream.TeardownProbe", "100000", "100000")
     val out = new StringBuilder
     val exit = Process(cmd, None, "SPARK_GRAFT_CPUS" -> "4")
       .!(ProcessLogger(l => out.append(l).append('\n'), _ => ()))
