@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.ext.Dedup
-import graft.stream.StreamingCuration
+import graft.stream.{IngestStream, StreamingCuration}
 
 /** Throughput figure for the STREAMING CURATION path — the ingest-time
   * Gopher gate + benchmark decontamination + corpus near-dup probe
@@ -51,12 +51,7 @@ object CurationStreamBench {
         lit(1704067200000000L) + col("doc_id") * 1000000L))
       .repartitionByRange(nFiles, col("doc_id"))
       .write.parquet(src)
-    val parts = new java.io.File(src).listFiles()
-      .filter(_.getName.startsWith("part-")).sortBy(_.getName)
-    val nowMs = System.currentTimeMillis()
-    parts.zipWithIndex.foreach { case (f, i) =>
-      f.setLastModified(nowMs - (parts.length - i) * 1000L)
-    }
+    IngestStream.pinPickOrder(src)
     val schema = spark.read.parquet(src).schema
 
     // static sides, built once and persisted — the deployment shape
@@ -120,11 +115,7 @@ object CurationStreamBench {
     emb.select((col("vec_id") + 1000000000L).as("doc_id"), col("embedding"))
       .repartitionByRange(nFiles, col("doc_id"))
       .write.parquet(src3)
-    val parts3 = new java.io.File(src3).listFiles()
-      .filter(_.getName.startsWith("part-")).sortBy(_.getName)
-    parts3.zipWithIndex.foreach { case (f, i) =>
-      f.setLastModified(nowMs - (parts3.length - i) * 1000L)
-    }
+    IngestStream.pinPickOrder(src3)
     val schema3 = spark.read.parquet(src3).schema
     val t2 = System.nanoTime()
     val q3 = StreamingCuration.runSemanticGate(

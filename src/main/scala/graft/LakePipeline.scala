@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.ext.{Dedup, Portable, Similarity}
-import graft.stream.StreamingCuration
+import graft.stream.{IngestStream, StreamingCuration}
 
 /** Streaming→batch composition across the LAKE boundary (r15 verdict
   * ask #4) — the reference's actual E1→E2 topology in ONE session:
@@ -101,12 +101,7 @@ object LakePipeline {
         lit(1704067200000000L) + col("doc_id") % 100000000L * 1000L))
       .repartitionByRange(32, col("doc_id"))
       .write.parquet(src)
-    val parts = new java.io.File(src).listFiles()
-      .filter(_.getName.startsWith("part-")).sortBy(_.getName)
-    val nowMs = System.currentTimeMillis()
-    parts.zipWithIndex.foreach { case (f, i) =>
-      f.setLastModified(nowMs - (parts.length - i) * 1000L)
-    }
+    IngestStream.pinPickOrder(src)
     val schema = spark.read.parquet(src).schema
     val lake = s"$outDir/lake"
     val t0 = System.nanoTime()

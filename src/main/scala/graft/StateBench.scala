@@ -5,13 +5,12 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.stream.Throttle
+import graft.stream.{IngestStream, Throttle}
 
 /** State-scale figure for the stateful alert path: the full-topology
   * StreamBench exercises the reference's real key space (3 locations ×
   * a few alert types ≈ 15 keys), which says nothing about how the
-  * throttle behaves when keyed state is LARGE — the regime the Spark 4
-  * `transformWithState`+RocksDB path exists for. This bench drives the
+  * throttle behaves when keyed state is LARGE. This bench drives the
   * [[Throttle]] operator alone with a synthetic high-cardinality
   * occurrence stream and reports the engine's own state-store metrics
   * alongside throughput. Keys round-robin at 1s event spacing, so each
@@ -21,10 +20,10 @@ import graft.stream.Throttle
   * TTL+watermark window), not the total key count, proving state ages
   * out instead of accumulating.
   *
-  * `runMain graft.StateBench [nEvents] [nKeys] [nFiles] [perTrigger]
-  * [tws]` — same time-ordered-shard discipline as StreamBench (range
-  * partitions + mtime-pinned pick order), so runs are deterministic
-  * and the two state APIs are compared on identical micro-batches.
+  * `runMain graft.StateBench [nEvents] [nKeys] [nFiles] [perTrigger]`
+  * — same time-ordered-shard discipline as StreamBench (range
+  * partitions + mtime-pinned pick order), so runs are deterministic.
+  * The throttle runs on the session's state store provider.
   */
 object StateBench {
   def main(args: Array[String]): Unit = {
@@ -32,30 +31,7 @@ object StateBench {
     val nKeys = args.lift(1).map(_.toLong).getOrElse(300000L)
     val nFiles = args.lift(2).map(_.toInt).getOrElse(32)
     val perTrigger = args.lift(3).map(_.toInt).getOrElse(4)
-    // 5th arg: "tws" = transformWithState on RocksDB (full-snapshot
-    // commits), "twslog" = same with changelog checkpointing (commit
-    // uploads the delta, snapshots compact in the background)
-    val mode = args.lift(4).getOrElse("")
-    val tws = mode.startsWith("tws")
     val spark = GraftSession.local()
-    if (tws) {
-      spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      // Avro state encoding: unlike the default UnsafeRow encoding,
-      // Avro supports ADDITIVE value-state schema evolution, so a
-      // checkpoint written before a state case class gained a field
-      // (e.g. TwsThrottleState's r8 lastSeenMs widening) restarts
-      // instead of failing on a row-format mismatch. Evolution is
-      // spec-proven in StateEvolutionSpec; cost at 10M keys is
-      // measured in SCALE.md §2 (override for same-window A/B runs:
-      // SPARK_GRAFT_STATE_ENCODING=unsaferow).
-      spark.conf.set("spark.sql.streaming.stateStore.encodingFormat",
-        sys.env.getOrElse("SPARK_GRAFT_STATE_ENCODING", "avro"))
-    }
-    if (mode == "twslog") spark.conf.set(
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-      "true")
     import spark.implicits._
 
     val root = Files.createTempDirectory("graft_statebench").toString
@@ -71,12 +47,7 @@ object StateBench {
       timestamp_micros(lit(1704067200000000L) + col("id") * 1000000L)
         .as("eventTime"))
       .write.parquet(src)
-    val parts = new java.io.File(src).listFiles()
-      .filter(_.getName.startsWith("part-")).sortBy(_.getName)
-    val nowMs = System.currentTimeMillis()
-    parts.zipWithIndex.foreach { case (f, i) =>
-      f.setLastModified(nowMs - (parts.length - i) * 1000L)
-    }
+    IngestStream.pinPickOrder(src)
 
     val occ = spark.readStream
       .schema("locId STRING, alertType STRING, priority STRING, " +
@@ -85,9 +56,7 @@ object StateBench {
       .parquet(src)
       .as[Throttle.Occurrence]
       .withWatermark("eventTime", "10 minutes")
-
-    val sent =
-      if (tws) Throttle.transformWithState(occ) else Throttle(occ)
+    val sent = Throttle(occ)
 
     val t0 = System.nanoTime()
     val q = sent.writeStream
@@ -122,7 +91,7 @@ object StateBench {
     }.mkString("[", ",", "]")
     println(s"""{"metric":"state_series","points":$series}""")
     println(
-      s"""{"metric":"state_bench","state_api":"${if (mode == "twslog") "transformWithState+rocksdb+changelog" else if (tws) "transformWithState+rocksdb" else "fMGWS+hdfs"}","events":$n,"n_keys":$nKeys,""" +
+      s"""{"metric":"state_bench","events":$n,"n_keys":$nKeys,""" +
         s""""wall_sec":${f"$wallSec%.1f"},"events_per_sec":${(n / wallSec).toInt},""" +
         s""""n_batches":${progress.length},"batch_ms_p50":${pct(0.5)},"batch_ms_max":${pct(1.0)},""" +
         s""""state_rows":$stateRows,"state_mem_mb":${f"$stateMemMb%.1f"}}""")

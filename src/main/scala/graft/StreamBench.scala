@@ -26,20 +26,7 @@ object StreamBench {
     val n = args.lift(0).map(_.toLong).getOrElse(1000000L)
     val nFiles = args.lift(1).map(_.toInt).getOrElse(32)
     val perTrigger = args.lift(2).map(_.toInt).getOrElse(4)
-    // 4th arg "tws": run the alert throttle on Spark 4
-    // transformWithState + RocksDB instead of fMGWS + the default
-    // HDFS-backed store — the two state-API paths ThrottleSpec proves
-    // equivalent, measured head to head
-    val tws = args.lift(3).contains("tws")
     val spark = GraftSession.local()
-    if (tws) {
-      spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      // avro state encoding: additive state-schema evolution across
-      // restarts (StateEvolutionSpec; see Throttle.TwsThrottleState doc)
-      spark.conf.set("spark.sql.streaming.stateStore.encodingFormat", "avro")
-    }
 
     val root = Files.createTempDirectory("graft_streambench").toString
     val (src, lake, alerts, ckpt) =
@@ -48,25 +35,16 @@ object StreamBench {
     // producer → files is the faithful topology (the reference's
     // producer publishes to MQTT, never feeds the Lambda in-process).
     // Shards are contiguous event-time slices (range partitions, no
-    // shuffle) and the mtime stamping below pins the file source's
-    // (modTime, path) pick order to event-time order — so micro-batches
-    // arrive in-order like a broker stream, the watermark/TTL are
-    // exercised mid-stream, and the alert count is run-deterministic
-    // (round-robin shards made every batch replay the full 34-day
-    // range, and mtime ties made the batch composition — and hence
-    // suppression decisions — vary run to run)
+    // shuffle; round-robin shards made every batch replay the full
+    // 34-day range) and pinPickOrder admits them in that order, so the
+    // alert count is run-deterministic
     FarmProducer.records(spark, n, numPartitions = nFiles).write.text(src)
-    val parts = new java.io.File(src).listFiles()
-      .filter(_.getName.startsWith("part-")).sortBy(_.getName)
-    val nowMs = System.currentTimeMillis()
-    parts.zipWithIndex.foreach { case (f, i) =>
-      f.setLastModified(nowMs - (parts.length - i) * 1000L)
-    }
+    IngestStream.pinPickOrder(src)
 
     val t0 = System.nanoTime()
     val (lakeQ, alertQ) = IngestStream.start(
       IngestStream.fileSource(spark, src, Some(perTrigger)),
-      lake, alerts, ckpt, useTransformWithState = tws)
+      lake, alerts, ckpt)
     lakeQ.awaitTermination()
     val lakeSec = (System.nanoTime() - t0) / 1e9
     alertQ.awaitTermination()
@@ -105,7 +83,7 @@ object StreamBench {
     if (HostCal.enabled) HostCal.warm(spark)
     val hostSpeed = HostCal.measure(spark, GraftSession.cores, curShuffle)
     println(
-      s"""{"metric":"stream_ingest","state_api":"${if (tws) "transformWithState+rocksdb" else "fMGWS+hdfs"}","events":$n,"wall_sec":${f"$wallSec%.1f"},""" +
+      s"""{"metric":"stream_ingest","events":$n,"wall_sec":${f"$wallSec%.1f"},""" +
         s""""lake_sec":${f"$lakeSec%.1f"},"events_per_sec":${(n / wallSec).toInt},""" +
         s""""n_batches":${batches.length},"batch_ms_p50":${pct(0.5)},""" +
         s""""batch_ms_p95":${pct(0.95)},"batch_ms_max":${pct(1.0)},""" +

@@ -229,8 +229,7 @@ object IngestStream {
       lakePath: String,
       alertPath: String,
       checkpointRoot: String,
-      watermarkDelay: String = "10 minutes",
-      useTransformWithState: Boolean = false): (StreamingQuery, StreamingQuery) = {
+      watermarkDelay: String = "10 minutes"): (StreamingQuery, StreamingQuery) = {
     // Per-micro-batch summary counts — the Lambda's batch summary
     // (lamda.py:533-541, SURVEY §2.4 A4) as observable metrics: free
     // (piggybacks the sink pass), surfaced in every
@@ -308,14 +307,7 @@ object IngestStream {
       .start()
 
     val occ = occurrences(process(rawStream))
-    val wm = occ.withWatermark("eventTime", watermarkDelay)
-    // same state machine on either API: the fMGWS default, or Spark 4
-    // transformWithState (requires the RocksDB provider on the session)
-    // — ThrottleSpec proves both paths equivalent; StreamBench measures
-    // them
-    val sent =
-      if (useTransformWithState) Throttle.transformWithState(wm)
-      else Throttle(wm)
+    val sent = Throttle(occ.withWatermark("eventTime", watermarkDelay))
     // SNS-shaped notification columns (lamda.py:285-314, SURVEY §2.1
     // S9): subject/message templates + recommended-action lookup.
     val (subject, message) = Alerts.formatMessage(
@@ -333,6 +325,25 @@ object IngestStream {
       .start()
 
     (lakeQuery, alertQuery)
+  }
+
+  /** Pins the file source's pick order to part-file name order.
+    * FileStreamSource admits files oldest-modification-time first, and
+    * files written in one job share near-identical mtimes, so without
+    * this a micro-batch's file set varies run to run. Stamping `part-*`
+    * files one second apart, in name order, makes range-partitioned
+    * shards arrive in event-time order like a broker stream: the
+    * watermark and TTL advance mid-stream and stateful outputs are
+    * run-deterministic. Call it on a directory written before the
+    * stream starts.
+    */
+  def pinPickOrder(dir: String): Unit = {
+    val parts = new java.io.File(dir).listFiles()
+      .filter(_.getName.startsWith("part-")).sortBy(_.getName)
+    val nowMs = System.currentTimeMillis()
+    parts.zipWithIndex.foreach { case (f, i) =>
+      f.setLastModified(nowMs - (parts.length - i) * 1000L)
+    }
   }
 
   /** Convenience source for tests/fixtures: a directory of JSONL files

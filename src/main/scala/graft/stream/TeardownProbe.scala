@@ -8,10 +8,12 @@ import org.apache.spark.sql.streaming.Trigger
 import graft.GraftSession
 
 /** Minimal reproduction/regression driver for the RocksDB teardown
-  * SIGSEGV (SCALE.md §2): run a changelog-checkpointed
-  * transformWithState query (the exact configuration the 10M soak
-  * crashed under), then tear the session down and exit 0. Run in a
-  * FORKED JVM by RocksDBTeardownSpec: if the native crash recurs, the
+  * SIGSEGV (SCALE.md §2): run the [[Throttle]] on the RocksDB state
+  * store with changelog checkpointing (the store configuration the 10M
+  * soak crashed under — the crash was a JNI logger-lifetime race in
+  * the provider's teardown, not in the operator), then tear the
+  * session down and exit 0. Run in a FORKED JVM by
+  * RocksDBTeardownSpec: if the native crash recurs, the
   * probe dies with SIGSEGV (exit 134/139) instead of killing the test
   * suite, and the spec fails on the exit code.
   *
@@ -30,7 +32,6 @@ object TeardownProbe {
     spark.conf.set(
       "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
       "true")
-    spark.conf.set("spark.sql.streaming.stateStore.encodingFormat", "avro")
     import spark.implicits._
 
     val root = Files.createTempDirectory("graft_teardown").toString
@@ -44,7 +45,7 @@ object TeardownProbe {
         .as("eventTime"))
       .write.parquet(s"$root/src")
 
-    val q = Throttle.transformWithState(
+    val q = Throttle(
         spark.readStream
           .schema("locId STRING, alertType STRING, priority STRING, " +
             "description STRING, eventId STRING, eventTime TIMESTAMP")

@@ -3,7 +3,7 @@ package graft.stream
 import java.sql.Timestamp
 
 import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Per-key stateful alert throttling — the reference's
   * `check_and_send_alert` (`Lambda/lamda.py:246-283`, SURVEY.md §2.7
@@ -32,6 +32,13 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateT
   * At 100 TB the state is bounded by key cardinality × fixed state size
   * and Spark shards it by key across executors; the TTL keeps it from
   * accumulating dead keys.
+  *
+  * One state API, `flatMapGroupsWithState`, serves both the streaming
+  * alert sink and the batch path (the lake's `alerts_sent` stamp), on
+  * whichever state store the session configures (HDFS-backed or
+  * RocksDB). A second implementation on Spark 4's arbitrary-state API
+  * emitted the identical alert set but ran slower in the keyed-state
+  * bench at 300k and 10M keys (SCALE.md §2), so it was removed.
   */
 object Throttle {
 
@@ -112,11 +119,16 @@ object Throttle {
       // Runs once, after the last occurrence is consumed: commit state
       // and stamp the deterministic event-time TTL (expire when the
       // watermark passes 1h beyond this key's newest occurrence).
-      // Inert in batch mode (no watermark — setTimeoutTimestamp throws).
+      // Spark filters late rows against the previous batch's watermark
+      // but rejects a timeout behind the current one, so a file landing
+      // out of event-time order can bring rows older than that horizon:
+      // clamp to the watermark, which expires such state at its next
+      // advance. Inert in batch mode (no watermark — both calls throw).
       sent ++ {
         state.update(st)
         if (lastMs != Long.MinValue) {
-          try state.setTimeoutTimestamp(lastMs + StateTtlMs)
+          try state.setTimeoutTimestamp(
+            math.max(lastMs + StateTtlMs, state.getCurrentWatermarkMs()))
           catch { case _: UnsupportedOperationException => () }
         }
         Iterator.empty
@@ -141,9 +153,10 @@ object Throttle {
     else processGroupSorted(key,
       occurrences.toSeq.sortBy(_.eventTime.getTime).iterator, state)
 
-  /** Apply the throttle to an occurrence stream or batch Dataset.
-    * Streaming callers set `withWatermark("eventTime", …)` upstream so
-    * the event-time TTL can fire.
+  /** Apply the throttle to an occurrence stream or batch Dataset — the
+    * same state machine and state API on both. Streaming callers set
+    * `withWatermark("eventTime", …)` upstream so the event-time TTL can
+    * fire.
     *
     * Batch uses an exchange-aligned secondary sort: repartition on the
     * grouping columns (satisfies the group operator's required
@@ -175,134 +188,5 @@ object Throttle {
           OutputMode.Append(), GroupStateTimeout.EventTimeTimeout())(
           processGroupSorted)
     }
-  }
-
-  /** [[ThrottleState]] plus the key's newest occurrence — the TTL
-    * anchor the timer-coalescing logic below re-arms against. Private
-    * to the transformWithState path — the fMGWS path keeps the 2-field
-    * state (its single timeout slot lives outside the state row). A
-    * live state row IMPLIES an outstanding timer (armed at row
-    * creation; the expiry handler either clears both or re-arms), so
-    * no armed flag is stored. NOTE: this widened the value-state
-    * schema vs the pre-round-8 2-field row. Under the DEFAULT
-    * UnsafeRow state encoding a transformWithState query cannot
-    * restart from a checkpoint written before such a change (the row
-    * format rejects added fields) — so the in-repo tws drivers set
-    * `spark.sql.streaming.stateStore.encodingFormat=avro`, whose
-    * encoder supports additive schema evolution (nullable/defaulted
-    * new fields); StateEvolutionSpec proves a 2-field→3-field restart
-    * round-trip on a real checkpoint under both encodings (avro
-    * restarts; unsaferow fails with the expected
-    * STATE_STORE_* schema-incompatibility error).
-    */
-  case class TwsThrottleState(
-      lastSentMs: Long, consecutive: Int, lastSeenMs: Long)
-
-  /** The same state machine on Spark 4's `transformWithState` — the
-    * arbitrary-stateful-processing API that supersedes
-    * flatMapGroupsWithState (SPARK-40434; SURVEY §2.7 ST2 names it).
-    * What it buys at scale: typed composable state on the RocksDB
-    * store (which transformWithState requires — keyed state spills to
-    * executor-local disk instead of the heap) and explicit per-key
-    * timers, which make the event-time TTL a first-class timer instead
-    * of fMGWS's single timeout slot.
-    *
-    * TTL timers are COALESCED, not slid: the first occurrence arms one
-    * timer at (occurrence + 1h); later occurrences only update
-    * `lastSeenMs` in the value state; when the timer fires, the handler
-    * clears the state if the watermark really passed
-    * (lastSeen + 1h) and otherwise re-arms at that horizon. Observable
-    * behavior is identical to sliding the timer forward per batch
-    * (state lives until the watermark passes 1h beyond the newest
-    * occurrence) at amortized O(1) point reads/writes per key. The
-    * slide-forward formulation (listTimers + deleteTimer + registerTimer
-    * per key per batch) is quadratic on RocksDB at scale: listTimers is
-    * a prefix SCAN, and per-key delete+re-register fills the timer
-    * column family with tombstones every seek must step over — the 10M
-    * StateBench soak measured its batches degrading from 4 s (125k
-    * fresh keys/batch) to 175–514 s (625k fresh keys/batch) before this
-    * rewrite (SCALE.md §2).
-    *
-    * Same contract as [[apply]]'s streaming path, spec'd by the same
-    * fixtures in ThrottleSpec: CRITICAL bypass, 5-min suppression
-    * across micro-batches, per-key independence, event-time TTL 1h
-    * past the key's newest occurrence.
-    */
-  class ThrottleProcessor extends StatefulProcessor[(String, String), Occurrence, Sent] {
-    @transient private var st: ValueState[TwsThrottleState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      // no store-level TTL: expiry is the explicit event-time timer
-      // below (store TTL is processing-time — not replayable)
-      st = getHandle.getValueState[TwsThrottleState](
-        "throttle", Encoders.product[TwsThrottleState], TTLConfig.NONE)
-
-    override def handleInputRows(
-        key: (String, String),
-        rows: Iterator[Occurrence],
-        timerValues: TimerValues): Iterator[Sent] = {
-      val exists = st.exists()
-      val prev =
-        if (exists) st.get() else TwsThrottleState(-1L, 0, Long.MinValue)
-      var s = ThrottleState(prev.lastSentMs, prev.consecutive)
-      // micro-batch group: bounded by the trigger, sorted in memory
-      // (the stateful shuffle delivers arbitrary within-key order)
-      var lastMs = Long.MinValue
-      val sent = rows.toSeq.sortBy(_.eventTime.getTime).flatMap { occ =>
-        val nowMs = occ.eventTime.getTime
-        lastMs = nowMs
-        val (next, fire) = step(s, occ.priority, nowMs)
-        s = next
-        if (fire)
-          Some(Sent(occ.locId, occ.alertType, occ.priority, occ.description,
-            occ.eventId, occ.eventTime, new Timestamp(nowMs)))
-        else None
-      }
-      val lastSeen = math.max(prev.lastSeenMs, lastMs)
-      // live row ⟺ outstanding timer, so arm only on row creation —
-      // and WRITE only when the invariant can hold: a new key whose
-      // row iterator was empty (lastSeen stays MinValue) gets neither
-      // a timer nor a state row, else the row would leak forever
-      // (r8 ADVICE: the old code wrote the row unconditionally while
-      // the timer guard skipped arming)
-      if (lastSeen != Long.MinValue) {
-        if (!exists) getHandle.registerTimer(lastSeen + StateTtlMs)
-        st.update(TwsThrottleState(s.lastSentMs, s.consecutive, lastSeen))
-      }
-      sent.iterator
-    }
-
-    override def handleExpiredTimer(
-        key: (String, String),
-        timerValues: TimerValues,
-        expiredTimerInfo: ExpiredTimerInfo): Iterator[Sent] = {
-      if (st.exists()) {
-        val horizon = st.get().lastSeenMs + StateTtlMs
-        // the watermark is ≥ the fired timer's expiry; judging staleness
-        // against it (not the expiry) clears a key whose horizon the
-        // watermark already passed without one more timer hop
-        val wmMs = math.max(
-          timerValues.getCurrentWatermarkInMs(),
-          expiredTimerInfo.getExpiryTimeInMs())
-        if (horizon <= wmMs) st.clear()
-        else
-          // newer occurrences arrived since this timer was armed:
-          // push the single timer out to the current TTL horizon
-          // (state row untouched — it already carries lastSeenMs)
-          getHandle.registerTimer(horizon)
-      }
-      Iterator.empty
-    }
-  }
-
-  /** [[apply]] via [[ThrottleProcessor]]. Streaming only
-    * (TimeMode.EventTime needs an upstream watermark), and the session
-    * must run the RocksDB state store provider.
-    */
-  def transformWithState(ds: Dataset[Occurrence]): Dataset[Sent] = {
-    implicit val outEnc = Encoders.product[Sent]
-    implicit val keyEnc = Encoders.tuple(Encoders.STRING, Encoders.STRING)
-    ds.groupByKey(o => (o.locId, o.alertType))
-      .transformWithState(new ThrottleProcessor, TimeMode.EventTime(), OutputMode.Append())
   }
 }

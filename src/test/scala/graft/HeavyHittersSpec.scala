@@ -12,16 +12,8 @@ import org.scalatest.funsuite.AnyFunSuite
 class HeavyHittersSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
-  private def withRocksDb[T](body: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
+  private def withRocksDb[T](body: => T): T =
+    TestSpark.withConf(TestSpark.RocksDb)(body)
 
   test("hot items survive with bounded undercount; cold noise cannot crowd them out") {
     withRocksDb {

@@ -25,8 +25,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *    documented at-least-once under crash replay, so counts are ≥1,
   *    not ==1).
   *
-  * StateEvolutionSpec proves state-SCHEMA evolution across restarts;
-  * this proves the operational crash story ST6 rests on.
+  * This proves the operational crash story ST6 rests on.
   */
 class IngestRecoverySpec extends AnyFunSuite {
 

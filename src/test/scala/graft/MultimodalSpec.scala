@@ -69,9 +69,7 @@ class MultimodalSpec extends AnyFunSuite {
       (10L, png(8, 4, gray = 40)),   // luma 40 → bin 2
       (11L, png(3, 5, gray = 250))   // luma 250 → bin 15
     ).toDF("doc_id", "data")
-    val prev = spark.conf.getOption(MultimodalStub.CodecFlag)
-    spark.conf.set(MultimodalStub.CodecFlag, "imageio")
-    try {
+    TestSpark.withConf(MultimodalStub.CodecFlag -> "imageio") {
       val rows = MultimodalStub.features(assets, payloadCol = "data")
         .collect()
         .map(r => r.getLong(0) ->
@@ -82,11 +80,6 @@ class MultimodalSpec extends AnyFunSuite {
       // solid-gray image: all luminance mass in one bin
       assert(rows(10L)._2(2) === 1.0 && rows(10L)._2.sum === 1.0)
       assert(rows(11L)._2(15) === 1.0 && rows(11L)._2.sum === 1.0)
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(MultimodalStub.CodecFlag, v)
-        case None => spark.conf.unset(MultimodalStub.CodecFlag)
-      }
     }
   }
 

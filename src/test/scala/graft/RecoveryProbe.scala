@@ -63,10 +63,10 @@ object RecoveryProbe {
       spark.conf.set(
         "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
         "true")
-      // encodingFormat=avro is transformWithState-only (Spark rejects it
-      // for the fMGWS throttle this topology runs: "State store encoding
-      // format as avro is not supported for operator=flatMapGroupsWithState");
-      // avro-encoded recovery is proven separately by StateEvolutionSpec.
+      // the store keeps its default state encoding: Spark rejects
+      // encodingFormat=avro for the fMGWS throttle this topology runs
+      // ("State store encoding format as avro is not supported for
+      // operator=flatMapGroupsWithState")
     }
     val (src, lake, alerts, cp) =
       (s"$root/src", s"$root/lake", s"$root/alerts", s"$root/cp")

@@ -5,8 +5,8 @@ import scala.sys.process._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Regression fence for the RocksDB teardown SIGSEGV (SCALE.md §2,
-  * r8 VERDICT ask #2): tears down a changelog-checkpointed
-  * transformWithState query in a FORKED JVM via
+  * r8 VERDICT ask #2): tears down a throttle query on the RocksDB
+  * store with changelog checkpointing in a FORKED JVM via
   * [[graft.stream.TeardownProbe]] (queries → StateStore.stop() →
   * spark.stop()) and asserts a clean
   * exit. A recurrence of the native crash is an exit code here
@@ -23,7 +23,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class RocksDBTeardownSpec extends AnyFunSuite {
 
-  test("ordered teardown of a changelog-checkpointed tws query exits clean") {
+  test("ordered teardown of a changelog-checkpointed throttle query exits clean") {
     val javaBin = s"${sys.props("java.home")}/bin/java"
     val cp = sys.props("java.class.path")
     val opens = Seq(

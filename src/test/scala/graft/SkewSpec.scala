@@ -110,16 +110,13 @@ class SkewSpec extends AnyFunSuite {
     val dim = (Seq("hot") ++ (0 until 300).map(i => s"cold_$i"))
       .flatMap(k => (0 until 3).map(j => (k, j)))
       .toDF("k", "j")
-    val confs = Seq(
+    TestSpark.withConf(
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.adaptive.skewJoin.enabled" -> "true",
       "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2.0",
       "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "64KB",
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "32KB")
-    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "32KB") {
       val joined = big.join(dim, "k")
       // execute THIS plan instance (count()/write() would build a new
       // QueryExecution and leave this adaptive plan un-finalized)
@@ -128,9 +125,6 @@ class SkewSpec extends AnyFunSuite {
       val finalPlan = qe.executedPlan.toString
       assert(finalPlan.contains("isSkewJoin=true") || finalPlan.contains("skewed"),
         s"AQE did not mark the join skew-split:\n$finalPlan")
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 }

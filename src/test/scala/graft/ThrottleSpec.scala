@@ -3,6 +3,8 @@ package graft
 import java.sql.Timestamp
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.scalacheck.Gen
+import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 import graft.stream.Throttle
 import graft.stream.Throttle.{Occurrence, ThrottleState}
@@ -10,7 +12,8 @@ import graft.stream.Throttle.{Occurrence, ThrottleState}
 /** Throttle state machine (`Lambda/lamda.py:246-283`): 5-min interval
   * suppression, CRITICAL bypass, consecutive-count threshold — unit
   * (pure step), batch Dataset, and Structured Streaming (MemoryStream,
-  * state across micro-batches with event-time TTL).
+  * state across micro-batches with event-time TTL, on both state store
+  * providers, and equal to the batch path over the same occurrences).
   */
 class ThrottleSpec extends AnyFunSuite {
 
@@ -103,22 +106,17 @@ class ThrottleSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("transformWithState: same contract on the Spark 4 arbitrary-state API") {
-    // The successor API (SPARK-40434): CRITICAL bypass + interval
-    // suppression + cross-micro-batch state, on the RocksDB store it
-    // requires. Same fixtures as the fMGWS path above.
+  test("streaming on RocksDB: CRITICAL bypass and suppression across micro-batches") {
+    // CRITICAL bypass + interval suppression + cross-micro-batch state,
+    // on the RocksDB state store provider (the throttle runs on
+    // whichever store the session configures)
     val spark = TestSpark.spark
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    TestSpark.withConf(TestSpark.RocksDb) {
       val input = MemoryStream[Occurrence]
-      val q = Throttle.transformWithState(
-          input.toDS().withWatermark("eventTime", "10 minutes"))
-        .writeStream.format("memory").queryName("throttle_tws")
+      val q = Throttle(input.toDS().withWatermark("eventTime", "10 minutes"))
+        .writeStream.format("memory").queryName("throttle_rocksdb")
         .outputMode("append").start()
       try {
         input.addData(occ(t0)) // first occurrence → sends, stamps t0
@@ -129,7 +127,7 @@ class ThrottleSpec extends AnyFunSuite {
         input.addData(occ(t0 + min(6))) // 4 min since t0+2 → suppressed
         input.addData(occ(t0 + min(8))) // 6 min since t0+2 → sends
         q.processAllAvailable()
-        val sent = spark.table("throttle_tws")
+        val sent = spark.table("throttle_rocksdb")
           .collect().map(_.getAs[Timestamp]("sentTime").getTime).sorted.toList
         assert(sent === List(t0, t0 + min(2), t0 + min(8)))
         // the state operator really ran on RocksDB
@@ -138,63 +136,128 @@ class ThrottleSpec extends AnyFunSuite {
         assert(metrics.exists(_.startsWith("rocksdb")),
           s"no rocksdb state metrics in progress: ${metrics.toSet}")
       } finally q.stop()
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
     }
   }
 
-  test("transformWithState: coalesced TTL timers age state out (clear + re-arm paths)") {
+  test("streaming: event-time TTL drops a key's state 1h past its newest occurrence") {
     // The TTL is output-invisible by design (it only bounds state), so
-    // this asserts on the engine's own numRowsTotal. Sequence drives
-    // BOTH expiry-handler branches: key A is seen twice (t0, t0+50min),
-    // so its first timer (armed at t0+1h from the first sighting) fires
-    // while the watermark is still short of the moved horizon — the
-    // RE-ARM path — and the re-armed timer later clears it, while B and
-    // C age out through the plain clear path. Bulk evidence for the same
-    // invariant (629,200-row plateau over a 10M-key space) is the
-    // StateBench soak in SCALE.md §2.
+    // this asserts on the engine's own numRowsTotal. Key A is seen
+    // twice (t0, t0+50min), so its timeout moves from t0+1h to
+    // t0+110min: it must survive the batch that runs at watermark
+    // 75min and age out at 170min, while B and C age out on their
+    // first timeout. Bulk evidence for the same invariant (a
+    // 629,200-row plateau over a 10M-key space) is the StateBench soak
+    // in SCALE.md §2.
     val spark = TestSpark.spark
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val input = MemoryStream[Occurrence]
+    val q = Throttle(input.toDS().withWatermark("eventTime", "10 minutes"))
+      .writeStream.format("memory").queryName("throttle_ttl")
+      .outputMode("append").start()
     try {
+      def addAndProcess(o: Occurrence): Unit = {
+        input.addData(o); q.processAllAvailable()
+      }
+      addAndProcess(occ(t0)) // A: timeout t0+1h
+      addAndProcess(occ(t0 + min(50))) // A again: timeout moves to t0+110min
+      addAndProcess(occ(t0 + min(85), key = "loc_C|High Temperature")) // C; watermark after this batch = 75min
+      addAndProcess(occ(t0 + min(180), key = "loc_B|High Temperature")) // runs at wm 75min: A (110min) survives
+      addAndProcess(occ(t0 + min(300), key = "loc_D|High Temperature")) // wm 170min: A and C (145min) have aged out
+      addAndProcess(occ(t0 + min(360), key = "loc_E|High Temperature")) // wm 290min: B (240min) has aged out
+      // threshold = 1 and every send is ≥ 5 min after the key's last:
+      // all six occurrences send regardless of TTL (output-invariant)
+      assert(spark.table("throttle_ttl").count() === 6)
+      // live state after the E batch: D + E only — A, B and C aged out
+      val rows = q.recentProgress.reverse
+        .flatMap(_.stateOperators.headOption).headOption
+        .map(_.numRowsTotal)
+      assert(rows.contains(2L), s"live state rows: $rows")
+    } finally q.stop()
+  }
+
+  test("streaming: a row older than the watermark's TTL horizon is throttled, not fatal") {
+    // Spark drops late rows against the PREVIOUS batch's watermark but
+    // validates timeouts against the current one, so a file arriving
+    // out of event-time order can hand the throttle a row whose
+    // 1h timeout is already behind the watermark. Without no-data
+    // batches the second trigger below runs at watermark t0+170min
+    // while its late-row filter still reads the initial watermark.
+    val spark = TestSpark.spark
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    TestSpark.withConf("spark.sql.streaming.noDataMicroBatches.enabled" -> "false") {
       val input = MemoryStream[Occurrence]
-      val q = Throttle.transformWithState(
-          input.toDS().withWatermark("eventTime", "10 minutes"))
-        .writeStream.format("memory").queryName("throttle_tws_ttl")
+      val q = Throttle(input.toDS().withWatermark("eventTime", "10 minutes"))
+        .writeStream.format("memory").queryName("throttle_late")
         .outputMode("append").start()
       try {
-        def addAndProcess(o: Occurrence): Unit = {
-          input.addData(o); q.processAllAvailable()
-        }
-        addAndProcess(occ(t0)) // A: arms timer at t0+1h
-        addAndProcess(occ(t0 + min(50))) // A again: horizon moves to t0+110min (timer untouched)
-        addAndProcess(occ(t0 + min(85), key = "loc_C|High Temperature")) // C; watermark after this batch = 75min
-        addAndProcess(occ(t0 + min(180), key = "loc_B|High Temperature")) // batch runs at wm 75min: A's t0+60min timer fires, horizon 110min > 75 → RE-ARM at 110min
-        addAndProcess(occ(t0 + min(300), key = "loc_D|High Temperature")) // wm 170min: A's re-armed 110min timer fires → clear; C (horizon 145min) clears
-        addAndProcess(occ(t0 + min(360), key = "loc_E|High Temperature")) // wm 290min: B (horizon 240min) clears
-        // threshold = 1 and every send is ≥ 5 min after the key's last:
-        // all six occurrences send regardless of TTL (output-invariant)
-        assert(spark.table("throttle_tws_ttl").count() === 6)
-        // live state after the E batch: D + E only — A (via the re-arm
-        // path: fired at 75min, re-armed to 110min, cleared at 170min)
-        // and B, C (plain clear path) aged out
-        val rows = q.recentProgress.reverse
-          .flatMap(_.stateOperators.headOption).headOption
-          .map(_.numRowsTotal)
-        assert(rows.contains(2L), s"live state rows: $rows")
+        input.addData(occ(t0 + min(180)))
+        q.processAllAvailable()
+        input.addData(occ(t0, key = "loc_L|High Temperature")) // 1h timeout < wm
+        q.processAllAvailable()
+        input.addData(occ(t0 + min(181))) // suppressed: loc_1 state intact
+        input.addData(occ(t0 + min(186)))
+        q.processAllAvailable()
+        val sent = spark.table("throttle_late").collect()
+          .map(r => (r.getAs[String]("locId"), r.getAs[Timestamp]("sentTime").getTime))
+          .sortBy(_._2).toList
+        assert(sent === List(
+          ("loc_L", t0), ("loc_1", t0 + min(180)), ("loc_1", t0 + min(186))))
       } finally q.stop()
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
     }
+  }
+
+  test("streaming state across shuffled micro-batches ≡ one batch over the union") {
+    // The lake's alerts_sent stamp takes apply()'s batch branch and the
+    // alert sink its streaming branch; both must decide identically
+    // when the same occurrences arrive over several triggers. Random
+    // occurrences over a few keys (one sparse, so it idles past the 1h
+    // TTL), mixed priorities, distinct event times per key (ties leave
+    // the per-key order unspecified on both paths), fed as time-ordered
+    // micro-batches shuffled inside each batch.
+    val spark = TestSpark.spark
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val occGen = for {
+      key <- Gen.frequency(
+        10 -> "loc_1|High Temperature", 10 -> "loc_1|Low Water Level",
+        10 -> "loc_2|High Temperature", 1 -> "loc_3|pH Out of Range")
+      tick <- Gen.choose(0, 4 * 360) // 4h at 10 s resolution
+      prio <- Gen.frequency(
+        6 -> "HIGH", 3 -> "MEDIUM", 2 -> "LOW", 1 -> "CRITICAL")
+    } yield occ(t0 + tick * 10000L, key, prio)
+    val crossBatchState = (1 to 3).map { seed =>
+      val occs = Gen.listOfN(120, occGen)
+        .apply(Gen.Parameters.default, Seed(seed.toLong)).get
+        .distinctBy(o => (o.locId, o.alertType, o.eventTime.getTime))
+        .sortBy(_.eventTime.getTime)
+      val rnd = new scala.util.Random(seed)
+      val batches = occs.grouped((occs.size + 3) / 4).map(rnd.shuffle(_)).toList
+      assert(batches.size >= 3)
+      val idlesPastTtl = occs.groupBy(o => (o.locId, o.alertType)).values
+        .exists(_.map(_.eventTime.getTime).sliding(2)
+          .exists(p => p.last - p.head > Throttle.StateTtlMs + min(10)))
+      val input = MemoryStream[Occurrence]
+      val q = Throttle(input.toDS().withWatermark("eventTime", "10 minutes"))
+        .writeStream.format("memory").queryName(s"throttle_prop_$seed")
+        .outputMode("append").start()
+      try {
+        batches.foreach { b => input.addData(b); q.processAllAvailable() }
+        val streamed =
+          spark.table(s"throttle_prop_$seed").as[Throttle.Sent].collect().toSet
+        val oneBatch = Throttle(occs.toDS()).collect().toSet
+        val (onlyStreamed, onlyBatch) = (streamed -- oneBatch, oneBatch -- streamed)
+        assert(onlyStreamed.isEmpty && onlyBatch.isEmpty,
+          s"seed $seed: streamed-only $onlyStreamed, batch-only $onlyBatch")
+        assert(oneBatch.nonEmpty && oneBatch.size < occs.size, s"seed $seed")
+        // batch-local history (no state across triggers) decides
+        // differently — the sets above agree because state carried over
+        (idlesPastTtl,
+          batches.flatMap(b => Throttle(b.toDS()).collect()).toSet != oneBatch)
+      } finally q.stop()
+    }
+    assert(crossBatchState.exists(_._1), "no key idled past the TTL")
+    assert(crossBatchState.exists(_._2))
   }
 }

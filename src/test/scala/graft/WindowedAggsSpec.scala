@@ -151,11 +151,7 @@ class WindowedAggsSpec extends AnyFunSuite {
     // default HDFS-backed store.
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    TestSpark.withConf(TestSpark.RocksDb) {
       val in = MemoryStream[(Timestamp, String, Double)]
       in.addData(
         (ts("2025-08-09 12:00:00"), "u1", 1.0),
@@ -178,11 +174,6 @@ class WindowedAggsSpec extends AnyFunSuite {
         .flatMap(_.customMetrics.keySet().toArray(Array.empty[String]))
       assert(metrics.exists(_.startsWith("rocksdb")),
         s"no rocksdb state metrics in progress: ${metrics.toSet}")
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
     }
   }
 }

@@ -4,7 +4,7 @@
 # long soak (StateBench/StreamBench/Scale) can run while sbt holds the
 # project lock for tests. Mirrors build.sbt's fork settings (JDK 17
 # add-opens, UTC session TZ, SPARK_DRIVER_MEM heap).
-#   tools/run_main.sh graft.StateBench 10000000 10000000 64 4 tws
+#   tools/run_main.sh graft.StateBench 10000000 10000000 64 4
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
