@@ -91,6 +91,16 @@ object GraftSession {
       // uses the sort path this pins — the bench now measures the same
       // writer production would.
       .config("spark.shuffle.sort.bypassMergeThreshold", "0")
+      // One executor class loader for every session (STATIC: read when
+      // a session is created). Spark's codegen cache is keyed by (task
+      // class loader, source), and with per-session artifact isolation
+      // each session — including the clone every streaming query runs
+      // on — gets its own executor class loader, so every query start
+      // would recompile all of its generated classes (33 per ingest
+      // drain, ~1 s of compile with the other tasks of the stage blocked
+      // on it). The engine adds no per-session jars or files, so there
+      // is nothing to isolate.
+      .config("spark.sql.artifact.isolation.enabled", "false")
       .config("spark.sql.shuffle.partitions", nShuffle)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -8,13 +8,14 @@ import org.apache.spark.sql.streaming.Trigger
 import graft.stream.{IngestStream, Throttle}
 
 /** State-scale figure for the stateful alert path: the full-topology
-  * StreamBench exercises the reference's real key space (3 locations ×
-  * a few alert types ≈ 15 keys), which says nothing about how the
-  * throttle behaves when keyed state is LARGE. This bench drives the
-  * [[Throttle]] operator alone with a synthetic high-cardinality
-  * occurrence stream and reports the engine's own state-store metrics
-  * alongside throughput. Keys round-robin at 1s event spacing, so each
-  * key recurs every nKeys seconds — beyond the 1h TTL once
+  * StreamBench exercises the reference's real key space (3 locations,
+  * one state row each), which says nothing about how the throttle
+  * behaves when keyed state is LARGE. This bench drives [[Throttle]]'s
+  * per-location processor — the one the ingest query runs — alone,
+  * through its occurrence API, with a synthetic high-cardinality
+  * location stream and reports the engine's own state-store metrics
+  * alongside throughput. Locations round-robin at 1s event spacing, so
+  * each recurs every nKeys seconds — beyond the 1h TTL once
   * nKeys > 3600, which makes the event-time TTL measurable: reported
   * state_rows is the LIVE horizon (one micro-batch's key span plus the
   * TTL+watermark window), not the total key count, proving state ages

@@ -17,9 +17,14 @@ import org.apache.spark.sql.functions._
   * watermark are silently dropped. The streaming path's
   * `withWatermark` + checkpoint subsumes this on live data.
   *
-  * Scale notes: the MAX pushes down to the fact scan's statistics
-  * (parquet footer min/max — no full scan), and the timestamp filter
-  * prunes partitions when the fact/lake is date-partitioned.
+  * Scale notes: the watermark's MAX is NOT answered from parquet footer
+  * statistics. On this (v1) parquet source the executed plan is
+  * `FileScan parquet [full_date]` → partial `HashAggregate` →
+  * `Exchange SinglePartition` → final `HashAggregate`, with no pushed
+  * aggregation, so it reads the `full_date` column of every fact file
+  * and its cost grows with the fact. (Column pruning keeps it to one
+  * column.) The timestamp filter prunes partitions when the fact/lake is
+  * date-partitioned.
   */
 object Incremental {
 

@@ -1,25 +1,36 @@
 package graft.stream
 
-
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Row, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.execution.streaming.sinks.FileStreamSink
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.{ArrayType, StructType}
 import graft.rules.{Alerts, Validation}
 import graft.schema.FarmSchema
 
 /** The streaming event path (SURVEY.md §3 E1): raw JSON payloads →
-  * parse → validate → alert-derive → status-routed lake sink, plus the
-  * throttled alert stream — the reference's Kinesis→Lambda→S3/SNS
-  * pipeline (`Lambda/lamda.py:395-530`) as one Structured Streaming
-  * topology.
+  * parse → validate → alert-derive → throttle → status-routed lake sink
+  * and alert sink — the reference's Kinesis→Lambda→S3/SNS pipeline
+  * (`Lambda/lamda.py:395-530`), which also makes one pass per record
+  * (validate, alert, throttle, route: `lamda.py:246-283, 467-471`), as
+  * ONE Structured Streaming query ([[start]]) that scans the source
+  * once per trigger.
   *
   * The record path is stateless column work (micro-batch or
   * `availableNow`, identical in batch — [[process]] is reused by batch
-  * callers and tests). The only stateful hop is the alert throttle
-  * ([[Throttle]], flatMapGroupsWithState) keyed by (loc_id,
-  * alert_type) — at scale, state shards by key and the event-time TTL
-  * bounds it; everything else scales embarrassingly with source
-  * partitions.
+  * callers and tests). The only stateful hop is the throttle
+  * ([[throttled]] on [[Throttle]]'s flatMapGroupsWithState processor),
+  * keyed by loc_id, which takes whole records and returns each with
+  * its send decisions — at scale, state shards by location and the
+  * event-time TTL bounds it; the record path scales embarrassingly
+  * with source partitions.
+  *
+  * Late data: every record lands in the lake, whatever its event time
+  * and whatever the trigger timing (no Spark late-row filter sits in
+  * front of the lake), and every alert with an event time is throttled
+  * against its location's state — [[Throttle]]'s header gives the one
+  * rule.
   *
   * Sink layout mirrors the reference's status routing
   * (`lamda.py:474-479`, key layout `:367`): VALID → `valid`, WARNING →
@@ -220,111 +231,167 @@ object IngestStream {
       .as[Throttle.Occurrence]
   }
 
-  /** Wire the full topology on a streaming `raw` DataFrame: the routed
-    * lake sink (foreachBatch, partitioned by route/loc_id) and the
-    * throttled alert sink. Returns both queries; callers await/stop.
+  /** The whole-record throttle: every record of `processed` comes back
+    * with a `_sent` column, the alerts of its `alerts` array that the
+    * per-location [[Throttle]] sent (type, priority, description,
+    * sentTime). Records keep every column, so one pass feeds both the
+    * lake and the alert sink. Records without an event time, or
+    * without alerts, pass through with an empty `_sent` (see
+    * [[occurrences]] for why an alert needs an event time). On a stream
+    * the event time gets `watermarkDelay`'s watermark, which only ages
+    * out idle locations' state: no record is dropped as late.
+    */
+  def throttled(processed: DataFrame, watermarkDelay: String = "10 minutes"): DataFrame = {
+    val keyed0 = processed
+      .withColumn(LocKey, coalesce(col("loc_id"), lit("unknown")))
+      .withColumn(EventTime, to_timestamp(col("timestamp")))
+    val keyed = Throttle.neverLate(
+      if (keyed0.isStreaming) keyed0.withWatermark(EventTime, watermarkDelay) else keyed0)
+    val (timeIdx, alertsIdx) =
+      (keyed.schema.fieldIndex(EventTime), keyed.schema.fieldIndex("alerts"))
+    def timeOf(r: Row): Long =
+      if (r.isNullAt(timeIdx)) Throttle.NoTime else r.getTimestamp(timeIdx).getTime
+    def alertsOf(r: Row): Seq[Row] =
+      if (r.isNullAt(alertsIdx)) Nil else r.getSeq[Row](alertsIdx)
+    val outSchema = keyed.schema.add(Sent, ArrayType(SentAlert))
+    Throttle.byLocation(keyed.as[Row](Encoders.row(keyed.schema)), LocKey, EventTime,
+      timeOf) { (records, state) =>
+      Throttle.throttleLocation[Row](records, state, timeOf,
+        r => alertsOf(r).map(a => a.getAs[String]("type") -> a.getAs[String]("priority")))
+        .map { case (r, fired) =>
+          val sent = alertsOf(r).zip(fired).collect { case (a, true) =>
+            Row(a.getAs[String]("type"), a.getAs[String]("priority"),
+              a.getAs[String]("description"), r.getTimestamp(timeIdx))
+          }
+          Row.fromSeq(r.toSeq :+ sent)
+        }
+    }(Encoders.row(keyed.schema), Encoders.row(outSchema))
+  }
+
+  private val LocKey = "_loc"
+  private val EventTime = "_event_time"
+  private val Sent = "_sent"
+  private val SentAlert = StructType.fromDDL(
+    "alertType STRING, priority STRING, description STRING, sentTime TIMESTAMP")
+  private val IsoMicros = "yyyy-MM-dd'T'HH:mm:ss.SSSSSS'Z'"
+
+  /** The alert sink's rows from [[throttled]] output: one per sent
+    * alert, SNS-shaped (lamda.py:285-314, SURVEY §2.1 S9: subject and
+    * message templates plus the recommended-action lookup).
+    */
+  private def sentAlerts(throttledRecords: DataFrame): DataFrame = {
+    val (subject, message) = Alerts.formatMessage(
+      col("alertType"), col("priority"), col("description"),
+      col("locId"), col("eventId"), col("eventTime").cast("string"))
+    throttledRecords
+      .select(explode(col(Sent)).as("s"), col(LocKey).as("locId"),
+        coalesce(col("event_id"), lit("unknown")).as("eventId"),
+        col(EventTime).as("eventTime"))
+      .select(col("locId"), col("s.alertType"), col("s.priority"),
+        col("s.description"), col("eventId"), col("eventTime"), col("s.sentTime"))
+      .withColumn("subject", subject)
+      .withColumn("message", message)
+  }
+
+  /** Wire the full topology on a streaming `raw` DataFrame as ONE
+    * query that scans the source once per trigger: [[process]] (with
+    * its `graft_ingest` summary metrics) → [[throttled]] → one
+    * foreachBatch that lands every record in the routed lake
+    * (partitioned by route/loc_id, with its `alerts_sent` stamp) and
+    * the sent alerts in the parquet alert sink.
+    *
+    * Returns that one query in both slots of the pair (callers written
+    * for the former lake/alert query pair still await, stop and read
+    * progress from it); the checkpoint is `checkpointRoot/ingest`.
     */
   def start(
       rawStream: DataFrame,
       lakePath: String,
       alertPath: String,
       checkpointRoot: String,
-      watermarkDelay: String = "10 minutes"): (StreamingQuery, StreamingQuery) = {
+      watermarkDelay: String = "10 minutes",
+      trigger: Trigger = Trigger.AvailableNow()): (StreamingQuery, StreamingQuery) = {
     // Per-micro-batch summary counts — the Lambda's batch summary
     // (lamda.py:533-541, SURVEY §2.4 A4) as observable metrics: free
     // (piggybacks the sink pass), surfaced in every
-    // StreamingQueryProgress.observedMetrics["graft_ingest"].
-    val lake = process(rawStream).observe("graft_ingest",
+    // StreamingQueryProgress.observedMetrics["graft_ingest"]. A batch
+    // without rows (an empty file) reports zeros, not NULL sums.
+    def total(c: Column) = coalesce(sum(c), lit(0L))
+    val records = process(rawStream).observe("graft_ingest",
       count(lit(1)).as("n_records"),
-      sum(when(col("route") === "invalid", 1).otherwise(0)).as("n_invalid"),
-      sum(when(col("route") === "errors/json_decode", 1).otherwise(0)).as("n_decode_errors"),
-      sum(size(col("alerts"))).as("n_alerts"))
-    val lakeQuery = lake.writeStream
-      .queryName("graft-ingest-lake")
-      .option("checkpointLocation", s"$checkpointRoot/lake")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch0: DataFrame, _: Long) =>
-        // two actions consume this batch (the alerts_sent aggregation
-        // and the lake write) — materialize once so the parse/validate
-        // pipeline runs once and the observe() metrics fire once
+      total(when(col("route") === "invalid", 1).otherwise(0)).as("n_invalid"),
+      total(when(col("route") === "errors/json_decode", 1).otherwise(0)).as("n_decode_errors"),
+      total(size(col("alerts"))).as("n_alerts"))
+    // The alert sink is Spark's own file sink, driven per batch: its
+    // _spark_metadata log skips a batch id it has already committed, so
+    // a batch replayed after a crash lands its alerts exactly once, and
+    // readers see only committed files.
+    val alertSink = new FileStreamSink(rawStream.sparkSession, alertPath,
+      new ParquetFileFormat(), Nil, Map.empty)
+    // bucket NAME analog for the s3:// back-reference, not the
+    // filesystem path (s3://<path> would be an authority-less URI)
+    val bucket = new java.io.File(lakePath).getName
+    val writer = throttled(records, watermarkDelay).writeStream
+      .queryName("graft-ingest")
+      .option("checkpointLocation", s"$checkpointRoot/ingest")
+      .trigger(trigger)
+      .foreachBatch { (batch0: DataFrame, batchId: Long) =>
+        // two writes consume this batch — materialize once so the
+        // record path and the throttle run once, the state commits once
+        // and the observe() metrics fire once
         val batch = batch0.persist()
         try {
-        // alerts_sent (lamda.py:467-471): which alerts fired for each
-        // record, stamped onto the landed record so lake rows join the
-        // sent-alert audit. Decisions come from the same deterministic
-        // Throttle state machine applied to THIS BATCH's occurrences —
-        // state does not span micro-batches here, so when a suppression
-        // window crosses a batch boundary the stamp can claim a send
-        // the checkpointed alert sink suppressed. The stamp is
-        // therefore "eligible to send given batch-local history"; the
-        // cross-batch source of truth is the alert sink, joinable on
-        // event_id. (The reference has the analogous at-least-once gap:
-        // its DynamoDB check-then-send races across concurrent Lambda
-        // invocations, lamda.py:246-283.)
-        val sentNow = Throttle(occurrences(batch))
-          .groupBy(col("eventId"))
-          .agg(to_json(collect_list(struct(
-            col("alertType").as("type"),
-            col("priority"),
-            date_format(col("sentTime"),
-              "yyyy-MM-dd'T'HH:mm:ss.SSSSSS'Z'").as("sent_timestamp"))))
-            .as("alerts_sent"))
-        // bucket NAME analog for the s3:// back-reference, not the
-        // filesystem path (s3://<path> would be an authority-less URI)
-        // occurrences coalesce a missing event_id to "unknown", so the
-        // lake side must too or id-less records would never stamp
-        val out = flattened(batch, new java.io.File(lakePath).getName)
-          .join(sentNow,
-            coalesce(col("event_id"), lit("unknown")) === col("eventId"), "left")
-          .drop("eventId")
-        try {
-          // uncompressed JSON, the reference's lake byte-shape (a gzip
-          // lake measured −8% throughput, SCALE.md §2 round 10)
-          out.write.mode("append").partitionBy("route", "loc_id")
-            .json(lakePath)
-        } catch {
-          case e: Throwable =>
-            // errors/processing fallback (lamda.py:505-530): a failed
-            // lake write routes the batch's raw payloads + partial
-            // fields to the error prefix instead of dropping them —
-            // the at-least-once story for sink-side failures.
-            try {
-              batch.select(
-                lit("processing_error").as("error_type"),
-                lit(String.valueOf(e.getMessage)).as("error_message"),
-                col("raw").as("raw_payload"),
-                get_json_object(col("raw"), "$.event_id").as("event_id"),
-                lit("errors/processing").as("route"),
-                get_json_object(col("raw"), "$.loc_id").as("loc_id"))
-                .write.mode("append")
-                .partitionBy("route", "loc_id")
-                .json(lakePath)
-            } catch { case _: Throwable => throw e }
-            throw e
-        }
+          // alerts_sent (lamda.py:467-471): which alerts fired for each
+          // record, from the same throttle decisions the alert sink
+          // lands — stamp and sink agree across micro-batches.
+          val stamped = batch.withColumn("alerts_sent",
+            when(size(col(Sent)) > 0, to_json(transform(col(Sent), s => struct(
+              s("alertType").as("type"), s("priority").as("priority"),
+              date_format(s("sentTime"), IsoMicros).as("sent_timestamp"))))))
+          try {
+            // uncompressed JSON, the reference's lake byte-shape (a gzip
+            // lake measured −8% throughput, SCALE.md §2 round 10); the
+            // throttle's location partitioning puts each (route, loc_id)
+            // in one task, so one part file per partition value
+            flattened(stamped, bucket).write.mode("append")
+              .partitionBy("route", "loc_id").json(lakePath)
+          } catch {
+            case e: Throwable =>
+              // errors/processing fallback (lamda.py:505-530): a failed
+              // lake write routes the batch's raw payloads + partial
+              // fields to the error prefix instead of dropping them —
+              // the at-least-once story for sink-side failures.
+              try {
+                batch.select(
+                  lit("processing_error").as("error_type"),
+                  lit(String.valueOf(e.getMessage)).as("error_message"),
+                  col("raw").as("raw_payload"),
+                  get_json_object(col("raw"), "$.event_id").as("event_id"),
+                  lit("errors/processing").as("route"),
+                  get_json_object(col("raw"), "$.loc_id").as("loc_id"))
+                  .write.mode("append")
+                  .partitionBy("route", "loc_id")
+                  .json(lakePath)
+              } catch { case _: Throwable => throw e }
+              throw e
+          }
+          alertSink.addBatch(batchId, sentAlerts(batch))
         } finally batch.unpersist()
       }
-      .start()
-
-    val occ = occurrences(process(rawStream))
-    val sent = Throttle(occ.withWatermark("eventTime", watermarkDelay))
-    // SNS-shaped notification columns (lamda.py:285-314, SURVEY §2.1
-    // S9): subject/message templates + recommended-action lookup.
-    val (subject, message) = Alerts.formatMessage(
-      col("alertType"), col("priority"), col("description"),
-      col("locId"), col("eventId"), col("eventTime").cast("string"))
-    val alertQuery = sent.toDF()
-      .withColumn("subject", subject)
-      .withColumn("message", message)
-      .writeStream
-      .queryName("graft-ingest-alerts")
-      .option("checkpointLocation", s"$checkpointRoot/alerts")
-      .trigger(Trigger.AvailableNow())
-      .format("parquet")
-      .option("path", alertPath)
-      .start()
-
-    (lakeQuery, alertQuery)
+    // No no-data micro-batches for this query: all they do is evict
+    // lapsed throttle state, and the late-data rule makes a lapsed state
+    // count as empty before it is evicted, so they cannot change an
+    // output — while each one re-runs the state job and both sink writes
+    // (a full extra trigger after every AvailableNow drain). The setting
+    // is read when the query is created, so it is set around start()
+    // only and the session keeps its own.
+    val spark = rawStream.sparkSession
+    val noData = "spark.sql.streaming.noDataMicroBatches.enabled"
+    val saved = spark.conf.getOption(noData)
+    spark.conf.set(noData, "false")
+    val query = try writer.start() finally
+      saved.fold(spark.conf.unset(noData))(spark.conf.set(noData, _))
+    (query, query)
   }
 
   /** Pins the file source's pick order to part-file name order.

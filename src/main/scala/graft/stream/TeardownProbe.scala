@@ -8,7 +8,7 @@ import org.apache.spark.sql.streaming.Trigger
 import graft.GraftSession
 
 /** Minimal reproduction/regression driver for the RocksDB teardown
-  * SIGSEGV (SCALE.md §2): run the [[Throttle]] on the RocksDB state
+  * SIGSEGV (SCALE.md §2): run the [[Throttle]] processor on the RocksDB state
   * store with changelog checkpointing (the store configuration the 10M
   * soak crashed under — the crash was a JNI logger-lifetime race in
   * the provider's teardown, not in the operator), then tear the

@@ -159,7 +159,7 @@ class IngestStreamSpec extends AnyFunSuite {
       .select("message").head.getString(0)
     assert(msg.contains("Recommended Action: Increase irrigation frequency"))
 
-    // batch summary metrics observed on the lake query (A4)
+    // batch summary metrics observed on the ingest query (A4)
     val observed = lakeQ.recentProgress
       .flatMap(p => Option(p.observedMetrics.get("graft_ingest")))
     assert(observed.nonEmpty)

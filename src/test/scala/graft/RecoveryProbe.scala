@@ -97,12 +97,12 @@ object RecoveryProbe {
         // the first drain commits batch 0 PLUS no-data watermark
         // batches AvailableNow appends for stateful eviction — the
         // crash target is the first batch id the image has never seen
-        val committed = Option(Paths.get(s"$cp/alerts/commits").toFile
+        val committed = Option(Paths.get(s"$cp/ingest/commits").toFile
           .list()).getOrElse(Array.empty)
           .flatMap(n => scala.util.Try(n.toLong).toOption)
         val watchBatch = if (committed.isEmpty) 0L else committed.max + 1L
         writeLines(s"$root/watch_batch", Seq(watchBatch.toString))
-        val offsetsN = Paths.get(s"$cp/alerts/offsets/$watchBatch")
+        val offsetsN = Paths.get(s"$cp/ingest/offsets/$watchBatch")
         val watcher = new Thread(() => {
           while (!Files.exists(offsetsN)) Thread.sleep(1L)
           Runtime.getRuntime.halt(42)
@@ -119,8 +119,8 @@ object RecoveryProbe {
         val watchBatch = new String(Files.readAllBytes(
           Paths.get(s"$root/watch_batch")), "UTF-8").trim
         val midBatch =
-          Files.exists(Paths.get(s"$cp/alerts/offsets/$watchBatch")) &&
-            !Files.exists(Paths.get(s"$cp/alerts/commits/$watchBatch"))
+          Files.exists(Paths.get(s"$cp/ingest/offsets/$watchBatch")) &&
+            !Files.exists(Paths.get(s"$cp/ingest/commits/$watchBatch"))
         val (l2, a2) = topology()
         l2.awaitTermination(); a2.awaitTermination()
 

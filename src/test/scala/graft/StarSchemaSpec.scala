@@ -134,11 +134,18 @@ class StarSchemaSpec extends AnyFunSuite {
       (6.0 + i * 0.01, 100.0 + i, 50.0 + i, 40.0 + i))
       .toDF("ph", "nitrogen", "phosphorus", "potassium")
     val dim = StarSchema.dimSoil(soil)
-    // the old global Window.orderBy plan contained `Exchange SinglePartition`
-    // — the single-reducer stage that dies first at 100× scale
-    val plan = dim.queryExecution.executedPlan.toString
-    assert(!plan.contains("SinglePartition"),
-      s"surrogate-key plan funnels through one partition:\n$plan")
+    // the old global Window.orderBy ranked in one reducer — the stage
+    // that dies first at 100× scale. The dim's own plan is a scan of the
+    // ranked RDD, so check the ranking in its lineage: the range-sorted
+    // RDD that zipWithIndex numbers must span several non-empty
+    // partitions.
+    def lineage(r: org.apache.spark.rdd.RDD[_]): Seq[org.apache.spark.rdd.RDD[_]] =
+      r +: r.dependencies.flatMap(d => lineage(d.rdd))
+    val ranked = lineage(dim.rdd).filter(_.getClass.getSimpleName == "ZippedWithIndexRDD")
+    assert(ranked.size === 1, s"no zipWithIndex ranking in ${dim.rdd.toDebugString}")
+    val sizes = ranked.head.mapPartitions(it => Iterator(it.size)).collect()
+    assert(sizes.count(_ > 0) > 1,
+      s"surrogate keys are ranked in one partition: sizes ${sizes.toList}")
     // keys are still the exact global rank in natural-key order, gap-free
     val keys = dim.orderBy("ph").select("soil_key").collect().map(_.getLong(0))
     assert(keys === (1L to 500L).toArray)

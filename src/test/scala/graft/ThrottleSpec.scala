@@ -141,7 +141,9 @@ class ThrottleSpec extends AnyFunSuite {
 
   test("streaming: event-time TTL drops a key's state 1h past its newest occurrence") {
     // The TTL is output-invisible by design (it only bounds state), so
-    // this asserts on the engine's own numRowsTotal. Key A is seen
+    // this asserts on the engine's own numRowsTotal. State is keyed by
+    // location and A..E are five locations, so a state row is a key
+    // below (one alert type each). Key A is seen
     // twice (t0, t0+50min), so its timeout moves from t0+1h to
     // t0+110min: it must survive the batch that runs at watermark
     // 75min and age out at 170min, while B and C age out on their
@@ -208,10 +210,40 @@ class ThrottleSpec extends AnyFunSuite {
     }
   }
 
+  test("streaming: late rows get the same decisions with no-data micro-batches on and off") {
+    // Spark's own late-row filter reads the previous batch's watermark,
+    // so it dropped loc_L's row only when a no-data batch ran in
+    // between; the throttle now decides late rows itself.
+    val spark = TestSpark.spark
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    def run(noData: String): List[(String, Long)] =
+      TestSpark.withConf("spark.sql.streaming.noDataMicroBatches.enabled" -> noData) {
+        val input = MemoryStream[Occurrence]
+        val q = Throttle(input.toDS().withWatermark("eventTime", "10 minutes"))
+          .writeStream.format("memory").queryName(s"throttle_late_$noData")
+          .outputMode("append").start()
+        try {
+          input.addData(occ(t0 + min(180)))
+          q.processAllAvailable()
+          input.addData(occ(t0, key = "loc_L|High Temperature"))
+          q.processAllAvailable()
+          input.addData(occ(t0 + min(181)), occ(t0 + min(186)))
+          q.processAllAvailable()
+          spark.table(s"throttle_late_$noData").collect()
+            .map(r => (r.getAs[String]("locId"), r.getAs[Timestamp]("sentTime").getTime))
+            .sortBy(_._2).toList
+        } finally q.stop()
+      }
+    val expected = List(("loc_L", t0), ("loc_1", t0 + min(180)), ("loc_1", t0 + min(186)))
+    assert(run("true") === expected)
+    assert(run("false") === expected)
+  }
+
   test("streaming state across shuffled micro-batches ≡ one batch over the union") {
-    // The lake's alerts_sent stamp takes apply()'s batch branch and the
-    // alert sink its streaming branch; both must decide identically
-    // when the same occurrences arrive over several triggers. Random
+    // The batch oracle takes apply()'s batch branch and the alert
+    // stream its streaming branch; both must decide identically when
+    // the same occurrences arrive over several triggers. Random
     // occurrences over a few keys (one sparse, so it idles past the 1h
     // TTL), mixed priorities, distinct event times per key (ties leave
     // the per-key order unspecified on both paths), fed as time-ordered
