@@ -21,6 +21,11 @@ import org.apache.spark.sql.SparkSession
   *  - AQE on with a 32 MB advisory partition size: at bench scale it
   *    coalesces the fixed shuffle-partition count down to the data; on
   *    a real cluster it re-plans skew joins at runtime.
+  *  - Generated class names without the codegen stage id
+  *    (`spark.sql.codegen.useIdInClassName=false`): the codegen cache is
+  *    keyed by the class's source, and the id made the same stage shape
+  *    a new source under every new stage id, so it compiled again. Every
+  *    query, registry and ETL alike, reuses what an earlier one compiled.
   */
 object GraftSession {
   /** Cores a local session runs on: `SPARK_GRAFT_CPUS` (the deployment
@@ -101,6 +106,14 @@ object GraftSession {
       // on it). The engine adds no per-session jars or files, so there
       // is nothing to isolate.
       .config("spark.sql.artifact.isolation.enabled", "false")
+      // Name generated classes without the codegen stage id. A
+      // whole-stage class embeds its stage id in its name, so the codegen
+      // cache (keyed by source) missed whenever a stage shape it already
+      // held came back under another id — after a warm-up, in the next
+      // ETL increment, or when AQE re-plans — and Janino compiled it
+      // again (69 → 43 compiles on a cold farm ETL increment). The id
+      // only labels the class; it changes nothing the class does.
+      .config("spark.sql.codegen.useIdInClassName", "false")
       .config("spark.sql.shuffle.partitions", nShuffle)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
