@@ -94,8 +94,8 @@ object CacheScope {
   /** Unpersist everything registered since the last drain. Called by
     * runners after each query's terminal action; non-blocking by
     * default (block removal proceeds async, registration bookkeeping
-    * is immediate). Measurement runners (Bench, QProf) pass
-    * `blocking = true` — outside their timed sections — so a long
+    * is immediate). The registry bench (Bench) passes
+    * `blocking = true` — outside its timed sections — so a long
     * 177-query × repeats session can never accumulate
     * pending-async-removal blocks into a later query's heap headroom
     * (r16 verdict item 1: the 32-core bench anomalies' one in-code

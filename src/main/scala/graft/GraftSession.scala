@@ -88,7 +88,7 @@ object GraftSession {
       // and every munmap is a TLB-shootdown IPI broadcast to all 32
       // vCPUs of this virtualized host. Thread dumps under q175 showed
       // task threads RUNNABLE inside map0/unmap0/open0 (149 of 214
-      // samples), not compute; QProf q102 32-core: 15.3 task-run
+      // samples), not compute; q102 job profile at 32 cores: 15.3 task-run
       // seconds with bypass vs 1.4 without (wall 1.3 → 0.67 s, at
       // 8-core parity). Production-scale neutral BY CONSTRUCTION: the
       // bypass path only exists for R ≤ 200, and any real cluster job

@@ -355,27 +355,6 @@ object KnnGraph {
     }
   }
 
-  /** Symmetrized top-k of a built graph `g(v, w, cos, rank)`: each
-    * node re-ranks the union of its FORWARD edges and its REVERSE
-    * edges (nodes that kept v in their lists). Cosine is symmetric,
-    * so the reverse direction re-uses the already-computed score —
-    * the arm costs ONE id-only exchange (union + groupBy + rank
-    * window over ≤ 2·kBuild rows/node) and touches neither the init
-    * volume nor the round machinery. The recall intuition: LSH misses
-    * are asymmetric (w landed in v's probe set but not vice versa),
-    * so a true neighbor absent from v's list is often present in
-    * REVERSE — the final output can harvest it for free. Priced in
-    * KnnBench (the `:sym` arm flag) on both fixtures per the r14
-    * verdict ask #5.
-    */
-  private[graft] def symmetrized(g: DataFrame, k: Int = K): DataFrame =
-    g.select("v", "w", "cos")
-      .unionAll(g.select(col("w").as("v"), col("v").as("w"), col("cos")))
-      .groupBy("v", "w").agg(max("cos").as("cos"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy("v").orderBy(col("cos").desc, col("w"))))
-      .filter(col("rank") <= k)
-
   /** Hamming-2 probe harvest on the FINAL re-rank only (the r14 ask-#5
     * candidate arm, named in the verdict): after the descent, each
     * node probes the C(planes, 2) buckets at hamming distance 2 from
@@ -383,7 +362,7 @@ object KnnGraph {
     * the harvested candidates re-rank together with the built graph's
     * edges. Init and rounds are untouched; the arm's cost is its own
     * pairing term n · C(p,2) · (n/2^p) — ~C(p,2)/(p+1) times the init's
-    * (×2.1 at p=6, ×7 at p=16), priced in KnnBench (`:h2`). Single-join
+    * (×2.1 at p=6, ×7 at p=16), priced by `Scale knn` (the `h2` finisher). Single-join
     * discipline throughout (no pair-shaped relation carries a vector
     * through an exchange — the probes side carries v's vector, the
     * bucket side w's, cos projected in-stage, WindowGroupLimit before
@@ -424,8 +403,8 @@ object KnnGraph {
     * uniform corpus hashes near the expectation (skew ≈ 1–2, measured
     * 1.41 on the sf0.1 driver corpus); a clustered mixture
     * concentrates whole clusters into shared sign-buckets (skew ≫ 1,
-    * measured 21.8 on the ClusteredGen 600k fixture) — and the
-    * h2 harvest only pays on the UNIFORM side (KnnBench r15: +0.154
+    * measured 21.8 on the `ScaleGen clustered` 600k fixture) — and the
+    * h2 harvest only pays on the UNIFORM side (`Scale knn` r15: +0.154
     * recall uniform vs +0.012 clustered at ~2× the init term). One
     * (bucket → count) aggregate over ids; no vectors move, and the
     * buckets are the SAME relation the init pass computes anyway — as

@@ -181,8 +181,8 @@ object Similarity {
     * 100 TB fix): the label-coarse index probes nprobe whole labels,
     * and with a FIXED label count the per-doc ADC scan grows linearly
     * with the corpus — measured fatal at ×300 (≈2.4M candidate rows
-    * PER DOC filled the scratch disk inside the composed LakePipeline
-    * run). The celled layout sub-partitions each label by the
+    * PER DOC filled the scratch disk inside the composed `Pipeline
+    * lake` run). The celled layout sub-partitions each label by the
     * deterministic sign-bucket of the vector at width p, the smallest
     * p with L·[[CellTarget]]·2^p ≥ n — mean cell size stays
     * ~[[CellTarget]] at every corpus size, so the per-doc probe cost
@@ -213,10 +213,9 @@ object Similarity {
 
   /** [[ivfPqBuild]] on the celled relabeling, dial derived from the
     * corpus (count + distinct labels — two 1-row driver decisions).
-    * Returns the index plus the width so incremental encoders can
-    * freeze the same dial. The build machinery is UNCHANGED — cells
-    * ride the opaque `label` key through centroids, residuals, codes,
-    * and the probe.
+    * Returns the index, the width and the corpus count. The build
+    * machinery is UNCHANGED — cells ride the opaque `label` key through
+    * centroids, residuals, codes, and the probe.
     */
   private[graft] def ivfPqBuildCelled(
       qv: DataFrame, cache: DataFrame => DataFrame): (IvfPqIndex, Int, Long) = {
@@ -230,36 +229,6 @@ object Similarity {
     val labels = r.getLong(1)
     val p = cellWidthFor(n, labels)
     (ivfPqBuild(celled(qv, p), cache), p, n)
-  }
-
-  /** Encode NEW vectors into an existing index's FIXED coarse
-    * centroids and PQ codebooks — the incremental-refresh path (r15
-    * verdict ask #8): one broadcast-joined pass over the new chunk
-    * (residual against the frozen per-label centroid, per-subspace
-    * nearest-codeword assignment — the same `key` arithmetic
-    * [[ivfPqBuild]]'s assign uses, so a vector present at build time
-    * encodes to the identical codes). Returns codes rows
-    * `(vec_id, label, j, code)` to union onto `idx.codes`. What this
-    * does NOT do is move the centroids or codewords — that is the
-    * point: the refresh-cadence experiment (CurationStreamBench
-    * `refresh` arm) prices exactly the drift this freezing causes
-    * against the full-rebuild cost it saves.
-    */
-  private[graft] def ivfPqEncode(qv: DataFrame, idx: IvfPqIndex): DataFrame = {
-    val rsub = qv.join(broadcast(idx.cent), "label")
-      .select(col("vec_id"), col("label"),
-        expr("zip_with(qe, c, (a, b) -> a - b)").as("r"))
-      .select(col("vec_id"), col("label"),
-        explode(expr("sequence(0, 7)")).as("j"), col("r"))
-      .select(col("vec_id"), col("label"), col("j"),
-        expr("slice(r, 8 * j + 1, 8)").as("s"))
-    rsub.join(broadcast(idx.codebook), "j")
-      .select(col("vec_id"), col("label"), col("j"), expr(
-        "(vec_ldot(s, s) - 2 * vec_ldot(s, c) + vec_ldot(c, c)) * 8 + cl")
-        .as("key"))
-      .groupBy("vec_id", "label", "j").agg(min("key").as("k"))
-      .select(col("vec_id"), col("label"), col("j"),
-        expr("k % 8").as("code"))
   }
 
   /** ADC top-k of a query batch `qp(qid, qe)` against an
@@ -541,7 +510,7 @@ object Similarity {
     * width of 6). Shared by q47 (multi-probe ANN) and the q175/q176
     * kNN-graph init; `planes` is the corpus-size dial (more planes →
     * smaller buckets; production raises it so bucket size stays
-    * ~constant — KnnBench measures the dial, the registered queries
+    * ~constant — `Scale knn` measures the dial, the registered queries
     * pin 6).
     */
   private[graft] def lshBucketExpr(planes: Int = 6): String = {

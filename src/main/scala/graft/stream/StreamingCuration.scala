@@ -142,7 +142,7 @@ object StreamingCuration {
       expr(Similarity.qeSpark).as("qe")))
     // CELLED coarse layout (r16): label-coarse probing is
     // corpus-linear per doc — at ×300 one micro-batch's ADC scan
-    // filled the scratch disk inside LakePipeline. Cells hold the
+    // filled the scratch disk inside `Pipeline lake`. Cells hold the
     // per-doc probe cost constant at every corpus size; on the spec
     // fixtures (n < labels·64) the width is 0 and the index is
     // bit-identical to the classic layout.

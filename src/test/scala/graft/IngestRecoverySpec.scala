@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import scala.sys.process._
-
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Crash/restart recovery proof for the full ingest topology (r9
@@ -31,31 +29,12 @@ class IngestRecoverySpec extends AnyFunSuite {
 
   private def fork(mode: String, root: String, provider: String,
       out: StringBuilder): Int = {
-    val javaBin = s"${sys.props("java.home")}/bin/java"
-    val cp = sys.props("java.class.path")
-    val opens = Seq(
-      "java.lang", "java.lang.invoke", "java.lang.reflect", "java.io",
-      "java.net", "java.nio", "java.util", "java.util.concurrent",
-      "java.util.concurrent.atomic", "sun.nio.ch", "sun.nio.cs",
-      "sun.security.action", "sun.util.calendar")
-      .flatMap(p => Seq("--add-opens", s"java.base/$p=ALL-UNNAMED"))
-    val cmd = Seq(javaBin) ++ opens ++ Seq(
-      "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
-      "-Xmx3g", "-cp", cp,
-      "graft.RecoveryProbe", mode, root, provider)
-    // keep a bounded stderr tail: Spark logs there, and a probe that
-    // dies before printing its JSON is undiagnosable without it
-    val errTail = new java.util.ArrayDeque[String](64)
-    val code = Process(cmd, None, "SPARK_GRAFT_CPUS" -> "4")
-      .!(ProcessLogger(l => out.append(l).append('\n'), l => {
-        if (errTail.size >= 60) errTail.removeFirst()
-        errTail.addLast(l)
-      }))
-    if (code != 0 && code != 42) {
-      out.append("--- stderr tail ---\n")
-      errTail.forEach(l => out.append(l).append('\n'))
-    }
-    code
+    val r = TestSpark.forkMain("graft.RecoveryProbe", Seq(mode, root, provider),
+      "SPARK_GRAFT_CPUS" -> "4")
+    out.append(r.out)
+    if (r.exit != 0 && r.exit != 42)
+      out.append("--- stderr tail ---\n").append(r.errTail)
+    r.exit
   }
 
   private def roundTrip(provider: String): Unit = {

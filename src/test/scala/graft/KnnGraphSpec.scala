@@ -194,25 +194,6 @@ class KnnGraphSpec extends AnyFunSuite {
     CacheScope.drain()
   }
 
-  test("symmetrized graph: top-k of forward ∪ reverse edges, score-preserving") {
-    import spark.implicits._
-    // 3 keeps 1 at 0.95 — node 1 must harvest 3 through the REVERSE
-    // direction at the same cosine; duplicate forward+reverse edges
-    // (1→2 and 2→1 would both yield (2,1)) collapse via max(cos)
-    val g = Seq((1L, 2L, 0.9), (3L, 1L, 0.95), (2L, 3L, 0.8))
-      .toDF("v", "w", "cos").withColumn("rank", lit(1))
-    val s = ext.KnnGraph.symmetrized(g, k = 2).collect()
-      .map(r => (r.getLong(0), r.getLong(1)) -> (r.getDouble(2), r.getInt(3)))
-      .toMap
-    assert(s((1L, 3L)) === ((0.95, 1)), s"node 1 must harvest 3 in reverse: $s")
-    assert(s((1L, 2L)) === ((0.9, 2)))
-    assert(s((2L, 1L)) === ((0.9, 1)) && s((2L, 3L)) === ((0.8, 2)))
-    assert(s((3L, 1L)) === ((0.95, 1)) && s((3L, 2L)) === ((0.8, 2)))
-    assert(s.size === 6)
-    // k=1 truncation keeps only each node's best
-    assert(ext.KnnGraph.symmetrized(g, k = 1).count() === 3)
-  }
-
   test("q180 SemDeDup laws: partition of the corpus, min-id canonical, live dials") {
     import ext.{KnnGraph, Similarity}
     val dir = "/root/testdata/sf0.001"

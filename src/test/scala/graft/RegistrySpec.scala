@@ -42,6 +42,28 @@ class RegistrySpec extends AnyFunSuite {
     assert(hits.isEmpty, s"environment reads in query code: ${hits.mkString(", ")}")
   }
 
+  test("the SPARK_GRAFT_* variables read are exactly the README's table") {
+    // an env knob nobody documents is a configuration nobody tests; a
+    // documented one nothing reads is a dead instruction
+    val knob = "SPARK_GRAFT_[A-Z][A-Z0-9_]*".r
+    def files(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(files) else Seq(f)
+    def text(f: java.io.File): String = {
+      val src = scala.io.Source.fromFile(f, "ISO-8859-1")
+      try src.mkString finally src.close()
+    }
+    val sources = files(new java.io.File("src/main")) ++
+      files(new java.io.File("tools")) :+ new java.io.File("build.sbt")
+    assert(sources.size > 2, "source tree not found")
+    val read = sources.flatMap(f => knob.findAllIn(text(f))).toSet
+    val table = text(new java.io.File("README.md")).linesIterator
+      .filter(_.startsWith("| `SPARK_GRAFT_"))
+      .flatMap(knob.findFirstIn).toSet
+    assert(read === table,
+      s"read but not in the README table: ${(read -- table).mkString(", ")}; " +
+        s"in the table but not read: ${(table -- read).mkString(", ")}")
+  }
+
   test("entry() smoke: flagship query returns rows at sf0.001") {
     assert(SparkEntry.entry(spark).count() > 0)
   }

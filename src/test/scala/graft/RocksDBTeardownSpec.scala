@@ -1,13 +1,11 @@
 package graft
 
-import scala.sys.process._
-
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Regression fence for the RocksDB teardown SIGSEGV (SCALE.md §2,
   * r8 VERDICT ask #2): tears down a throttle query on the RocksDB
   * store with changelog checkpointing in a FORKED JVM via
-  * [[graft.stream.TeardownProbe]] (queries → StateStore.stop() →
+  * [[TeardownProbe]] (queries → StateStore.stop() →
   * spark.stop()) and asserts a clean
   * exit. A recurrence of the native crash is an exit code here
   * (SIGSEGV → 134/139), not a killed test suite; the probe holds its
@@ -24,23 +22,10 @@ import org.scalatest.funsuite.AnyFunSuite
 class RocksDBTeardownSpec extends AnyFunSuite {
 
   test("ordered teardown of a changelog-checkpointed throttle query exits clean") {
-    val javaBin = s"${sys.props("java.home")}/bin/java"
-    val cp = sys.props("java.class.path")
-    val opens = Seq(
-      "java.lang", "java.lang.invoke", "java.lang.reflect", "java.io",
-      "java.net", "java.nio", "java.util", "java.util.concurrent",
-      "java.util.concurrent.atomic", "sun.nio.ch", "sun.nio.cs",
-      "sun.security.action", "sun.util.calendar")
-      .flatMap(p => Seq("--add-opens", s"java.base/$p=ALL-UNNAMED"))
-    val cmd = Seq(javaBin) ++ opens ++ Seq(
-      "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
-      "-Xmx3g", "-cp", cp,
-      "graft.stream.TeardownProbe", "100000", "100000")
-    val out = new StringBuilder
-    val exit = Process(cmd, None, "SPARK_GRAFT_CPUS" -> "4")
-      .!(ProcessLogger(l => out.append(l).append('\n'), _ => ()))
+    val TestSpark.Forked(exit, out, _) = TestSpark.forkMain(
+      "graft.TeardownProbe", Seq("100000", "100000"), "SPARK_GRAFT_CPUS" -> "4")
     assert(exit === 0, s"probe JVM exited $exit (SIGSEGV=134/139)")
-    assert(out.toString.contains("\"clean_exit\":true"),
-      s"probe did not report a clean exit:\n${out.toString.takeRight(500)}")
+    assert(out.contains("\"clean_exit\":true"),
+      s"probe did not report a clean exit:\n${out.takeRight(500)}")
   }
 }

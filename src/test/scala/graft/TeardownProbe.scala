@@ -1,11 +1,11 @@
-package graft.stream
+package graft
 
 import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.GraftSession
+import graft.stream.{OrderlyShutdown, Throttle}
 
 /** Minimal reproduction/regression driver for the RocksDB teardown
   * SIGSEGV (SCALE.md §2): run the [[Throttle]] processor on the RocksDB state
@@ -17,7 +17,7 @@ import graft.GraftSession
   * probe dies with SIGSEGV (exit 134/139) instead of killing the test
   * suite, and the spec fails on the exit code.
   *
-  * `runMain graft.stream.TeardownProbe [nEvents] [nKeys]` tears down
+  * `graft.TeardownProbe [nEvents] [nKeys]` tears down
   * via [[OrderlyShutdown]] (queries → StateStore.stop() →
   * spark.stop()).
   */

@@ -148,7 +148,7 @@ class ThrottleSpec extends AnyFunSuite {
     // t0+110min: it must survive the batch that runs at watermark
     // 75min and age out at 170min, while B and C age out on their
     // first timeout. Bulk evidence for the same invariant (a
-    // 629,200-row plateau over a 10M-key space) is the StateBench soak
+    // 629,200-row plateau over a 10M-key space) is the `StreamBench state` soak
     // in SCALE.md §2.
     val spark = TestSpark.spark
     import spark.implicits._

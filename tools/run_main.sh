@@ -1,15 +1,17 @@
 #!/usr/bin/env bash
 # Run a graft main class directly against the compiled classes + the
 # /opt/spark/jars unmanaged classpath, without going through sbt — so a
-# long soak (StateBench/StreamBench/Scale) can run while sbt holds the
-# project lock for tests. Mirrors build.sbt's fork settings (JDK 17
-# add-opens, UTC session TZ, SPARK_DRIVER_MEM heap).
-#   tools/run_main.sh graft.StateBench 10000000 10000000 64 4
+# long soak (Scale, StreamBench) can run while sbt holds the project
+# lock for tests. Mirrors build.sbt's fork settings: JDK 17 add-opens,
+# UTC session TZ, and a heap of SPARK_DRIVER_MEM, else half of
+# MemTotal clamped to 2–8g (2g when /proc/meminfo is unreadable).
+#   tools/run_main.sh graft.StreamBench state 10000000 10000000 64 4
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
 main="$1"; shift
-heap="${SPARK_DRIVER_MEM:-8g}"
+heap="${SPARK_DRIVER_MEM:-$(awk '/^MemTotal:/ {g = int($2 / 2097152)}
+  END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' /proc/meminfo 2>/dev/null || echo 2g)}"
 opens=(java.lang java.lang.invoke java.lang.reflect java.io java.net \
   java.nio java.util java.util.concurrent java.util.concurrent.atomic)
 flags=()
