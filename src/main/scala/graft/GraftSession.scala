@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.io.{NioLocalFileSystem, NioLocalFs}
+
 /** One place to build the engine's SparkSession so every entry point
   * (Verify, Bench, the soak and streaming mains, tests) runs with
   * identical semantics.
@@ -26,8 +28,23 @@ import org.apache.spark.sql.SparkSession
   *    keyed by the class's source, and the id made the same stage shape
   *    a new source under every new stage id, so it compiled again. Every
   *    query, registry and ETL alike, reuses what an earlier one compiled.
+  *  - The `file:` filesystem (`spark.hadoop.fs.file.impl` and
+  *    `spark.hadoop.fs.AbstractFileSystem.file.impl`): [[graft.io]]'s
+  *    classes, which create local files without spawning a `chmod` per
+  *    file, `.crc` sidecar and directory, or a `readlink` per FileContext
+  *    status (Hadoop's local filesystem does both without its native
+  *    library). Every writer inherits them: the lake and alert sinks, the
+  *    offset/commit logs, state-store deltas and the ETL's parquet. Set on
+  *    a pre-existing session's Hadoop configuration too; a `file:`
+  *    `FileSystem` instance cached before that point is kept (Hadoop's
+  *    cache key has no configuration in it).
   */
 object GraftSession {
+  /** The engine's `file:` filesystem, FileSystem and FileContext. */
+  private val LocalFs = Seq(
+    "fs.file.impl" -> classOf[NioLocalFileSystem].getName,
+    "fs.AbstractFileSystem.file.impl" -> classOf[NioLocalFs].getName)
+
   /** Cores a local session runs on: `SPARK_GRAFT_CPUS` (the deployment
     * setting; "*" means every core), else every core of this host — a
     * default that never oversubscribes the machine it runs on.
@@ -114,6 +131,8 @@ object GraftSession {
       // again (69 → 43 compiles on a cold farm ETL increment). The id
       // only labels the class; it changes nothing the class does.
       .config("spark.sql.codegen.useIdInClassName", "false")
+      // Local files without a process per file (header).
+      .config(LocalFs.map { case (k, v) => s"spark.hadoop.$k" -> v }.toMap)
       .config("spark.sql.shuffle.partitions", nShuffle)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -126,7 +145,9 @@ object GraftSession {
     // semantics-bearing settings above are all runtime SQL confs, so
     // re-assert them on whatever session came back; the kernels are
     // registered imperatively for the same reason (the extensions hook
-    // only fires for sessions built with it).
+    // only fires for sessions built with it), and the `file:` classes are
+    // set on the context's Hadoop configuration, which every later
+    // session and task conf is copied from.
     Seq(
       "spark.sql.shuffle.partitions" -> nShuffle,
       "spark.sql.session.timeZone" -> "UTC",
@@ -134,6 +155,7 @@ object GraftSession {
       "spark.sql.adaptive.enabled" -> "true",
       "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "32m"
     ).foreach { case (k, v) => spark.conf.set(k, v) }
+    LocalFs.foreach { case (k, v) => spark.sparkContext.hadoopConfiguration.set(k, v) }
     spark.sparkContext.setLogLevel("WARN")
     graft.functions.VectorExpressions.register(spark)
     spark

@@ -213,12 +213,12 @@ object Similarity {
 
   /** [[ivfPqBuild]] on the celled relabeling, dial derived from the
     * corpus (count + distinct labels — two 1-row driver decisions).
-    * Returns the index, the width and the corpus count. The build
+    * Returns the index and the corpus count. The build
     * machinery is UNCHANGED — cells ride the opaque `label` key through
     * centroids, residuals, codes, and the probe.
     */
   private[graft] def ivfPqBuildCelled(
-      qv: DataFrame, cache: DataFrame => DataFrame): (IvfPqIndex, Int, Long) = {
+      qv: DataFrame, cache: DataFrame => DataFrame): (IvfPqIndex, Long) = {
     // one fused driver decision (r16 opt round): count + distinct-label
     // count in a single aggregate job (count_distinct plans as one
     // expand + two-phase aggregate) instead of two separate actions —
@@ -228,7 +228,7 @@ object Similarity {
     val n = r.getLong(0)
     val labels = r.getLong(1)
     val p = cellWidthFor(n, labels)
-    (ivfPqBuild(celled(qv, p), cache), p, n)
+    (ivfPqBuild(celled(qv, p), cache), n)
   }
 
   /** ADC top-k of a query batch `qp(qid, qe)` against an
@@ -1656,7 +1656,7 @@ object Similarity {
       val qv = Tables.embeddings(s, d)
         .select(col("vec_id"), col("label"), expr(qeSpark).as("qe"))
         .transform(CacheScope.scoped) // index build + the gated batch
-      val (idx, _, n) = ivfPqBuildCelled(qv, CacheScope.scoped)
+      val (idx, n) = ivfPqBuildCelled(qv, CacheScope.scoped)
       val tau = calibratedGateTau(qv, idx, Some(n))
       val batch = Tables.embeddings(s, d)
         .select(col("vec_id").as("doc_id"), col("embedding"))

@@ -4,8 +4,11 @@
 # long soak (Scale, StreamBench) can run while sbt holds the project
 # lock for tests. Mirrors build.sbt's fork settings: JDK 17 add-opens,
 # UTC session TZ, and a heap of SPARK_DRIVER_MEM, else half of
-# MemTotal clamped to 2–8g (2g when /proc/meminfo is unreadable).
+# MemTotal clamped to 2–8g (2g when /proc/meminfo is unreadable). The
+# compiled test classes are on the class path too (after `sbt
+# Test/compile`), so the probe mains under src/test run the same way.
 #   tools/run_main.sh graft.StreamBench state 10000000 10000000 64 4
+#   tools/run_main.sh graft.SpawnProbe /tmp/probe 3 4000 8
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
@@ -22,5 +25,5 @@ done
 exec java "${flags[@]}" \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   "-Xmx$heap" \
-  -cp "target/scala-2.13/classes:/opt/spark/jars/*" \
+  -cp "target/scala-2.13/classes:target/scala-2.13/test-classes:/opt/spark/jars/*" \
   "$main" "$@"
