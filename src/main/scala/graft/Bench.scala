@@ -1,152 +1,159 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
+import java.io.File
+import java.nio.file.{Files, Paths}
+
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+import scala.util.Random
+
+import com.fasterxml.jackson.databind.ObjectMapper
+import org.apache.spark.graft.ListenerDrain
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+/** The registry bench, and the measurement loop it shares with the soak
+  * ([[Scale]]).
+  *
+  *   SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 runMain graft.Bench
+  *
+  * [[measure]] warms every query once on the sf0.001 tables, then makes
+  * SPARK_GRAFT_REPEATS passes (Bench 3, Scale 1), each in an order
+  * shuffled by [[Seed]], so a slow host window lands on different
+  * neighbours in each pass. A query's time is its best successful pass:
+  * contention only adds time. Each run writes to the noop sink (which,
+  * unlike count(), evaluates every output column) with one
+  * [[TaskMetrics]] attached; `CacheScope.drain` follows outside the
+  * timed section, and a persisted RDD that survives it fails the pass.
+  *
+  * Bench judges the total of best times against [[Pinned]], and each
+  * query's first-pass job count, which does not depend on the host's
+  * speed, against the committed golden [[GoldenPath]]. The full record
+  * goes to BENCH_FULL_latest.json in the working directory; the last
+  * stdout line is a compact summary.
+  */
 object Bench {
-  /** The clean-host total-seconds envelope for the CURRENT registry,
-    * measured in SCALE.md §0 (min-of-3, noop sink, sf0.1, local[32]):
-    * the round-9 158-query registry read 94.6–100.1 s across three
-    * clean runs in one session window (BENCH_CLEAN_r9.json; that
-    * window itself read uniformly ~1.25× the r8 window on identical
-    * machinery — scaled per-query, rank-preserving — so an r8-speed
-    * window would read ~78 s; both are "clean", which is why the band
-    * spans them: 78–101). Pinned WITH the registry size it was
-    * measured on — if the registry grows, the verdict degrades to
-    * "no-band-for-registry" instead of judging against a stale band.
-    * Re-measure and bump when the registry changes
-    * (BENCH_CLEAN_r{N}.json).
-    *
-    * Round-10 re-pin for the 159-query registry (q165 added): the
-    * r10 clean run read 68.2 s in a window whose host-speed ratio vs
-    * the r9 anchor was 0.897 — i.e. ~76.0 s at r9-window speed —
-    * while the r9 window itself read ~1.25× the r8 one. The band
-    * spans a slightly-faster-than-r10 window (65 s) through the
-    * slow-r9-window upper edge scaled to 159 queries (~102 s).
-    *
-    * Round-11 re-pin for the 160-query registry (q166 simhash128
-    * pairs added): q166 measures ~0.4 s at sf0.1, so the upper edge
-    * widens by the additive query (102 → 103); the floor stays — the
-    * r11 clean windows read 62.0–71.6 s, inside the band.
-    *
-    * Round-12 re-pin for the 164-query registry (q167–q169, the
-    * 128-bit cluster family, ~2 s each at bench scale, plus q170, the
-    * 128-bit triangle census, ~1 s): the r12 clean triplet (163-query
-    * tree) read 77.7–87.2 s raw in 0.94–1.02 windows; the raw band
-    * scales that envelope to the historical window range (0.86–1.25)
-    * plus the additive q170: ~70–110. The raw band is now only the
-    * FALLBACK when calibration is off — the primary check is
-    * [[NormBandSec]] below.
-    *
-    * Round-13 re-pin for the 170-query registry (q171 banding recall
-    * audit ~2.5 s, q172 soft dedup ~2.5 s, q173/q174 PQ tier ~2 s
-    * each, q175/q176 kNN graph + audit, the two heaviest adds at
-    * 5.3–8.4 s — ~20 normalized seconds total): the r13 clean triplet
-    * (BENCH_CLEAN_r13.json) read 115.5–120.8 s raw in fast 1.125–1.133
-    * windows, 101.9–106.6 normalized. Raw band = the r12 convention,
-    * norm envelope scaled across the historical window range
-    * (≈ ×1.215 on the r12 edges): ~85–134.
-    *
-    * Round-14 re-pin for the 171-query registry (q177 weighted token
-    * budget, ~2.5–3 s — it rides the q172 cluster machinery): clean
-    * triplet raw 102.2 / 110.1 / 114.3 s in 0.93–1.04 windows
-    * (BENCH_CLEAN_r14 evidence; loads 0.05–5.6, zero other JVMs).
-    * Raw band = the triplet envelope scaled to the historical window
-    * range (0.86–1.25): ~88–138. q175/q176's bench time is stable
-    * (iterative_overhead_sec 10.1–12.0 vs r13's ~11) — the r14
-    * descent rework moved soak-scale cost, not the bench-scale
-    * scheduling floor.
-    *
-    * Round-15 re-pin for the 174-query registry (q178 semantic-gate
-    * batch pin, ~2–3 s — a full-corpus ADC self-probe; q179 kNN
-    * label-noise audit and q180 graph SemDeDup — both ride the q175
-    * descent and join IterativeOverheadQueries): clean triplet raw
-    * 104.2 / 106.0 / 112.0 s in 0.872–1.003 windows, zero errors,
-    * zero other JVMs (BENCH_CLEAN_r15.json). Raw band = the r14
-    * convention (envelope min × 0.86, median × 1.25): ~90–133. The
-    * triplet was taken AFTER the r15 descent fix (each round
-    * localCheckpointed — the ~6^r nested-plan analysis cost was ~15 s
-    * per referencing action; an interim 173-query triplet before the
-    * fix read 115.6–133.6 raw with q180 at 102 s): the 174-query
-    * registry now runs FASTER than r14's 171 (normalized 111.6–119.5
-    * vs 113.7), with the iterative floor back at 13.3–15.0 s for FOUR
-    * descent queries vs r14's 13.1 for two.
-    */
-  val CleanBandSec: (Double, Double) = (90.0, 133.0)
-  val CleanBandQueries = 174
-  /** …and only for the SF the band was measured at. */
-  val CleanBandSf = "sf0.1"
+  type QFn = (SparkSession, String) => DataFrame
 
-  /** NORMALIZED-total clean band (r11 verdict ask #4: the raw band is
-    * host-window hostage — ±25% across sessions — so the envelope
-    * check is now keyed on total / host_speed_vs_clean_r9, i.e. the
-    * total expressed in r9-clean-window seconds, where the measured
-    * inter-run residual is only a few percent). Evidence: r10 clean
-    * 68.2 s @ 0.897 ≈ 76.0 normalized (159 q); r11 clean 74.1 s @
-    * 0.948 ≈ 78.2 (160 q); the r12 clean triplet on the 163-query
-    * registry (q167–q169 added: the 128-bit CC trio, ~2 s each at
-    * bench scale — BENCH_CLEAN_r12.json) measured 81.0 / 82.6 / 86.3
-    * normalized. Band = triplet envelope ± the measured inter-run
-    * residual (86.3 × 1.064 ≈ 92) widened by the additive late-round
-    * q170 (~1 s), floor relaxed below r10's 76 (a faster future
-    * window must not read as "contended"). Raw band kept above as
-    * the fallback when calibration is off (hostSpeed ≤ 0).
-    *
-    * r13 re-pin (170 queries, q171–q176 added): clean triplet
-    * normalized 101.9 / 106.6 / 106.0 (BENCH_CLEAN_r13.json).
-    * Ceiling = 106.6 × 1.064 ≈ 113.4 → 114; floor relaxed by the
-    * same r12 proportion (≈ envelope min × 0.89) → 90.
-    *
-    * r14 re-pin (171 queries, q177 added): clean triplet normalized
-    * 100.1 / 110.2 / 118.3 — an 18% spread, wider than the measured
-    * 6.4% residual because run 1's median-based host stamp (0.931 at
-    * load 0.05) disagrees with its raw total; the band honors the
-    * full measured envelope rather than discarding the outlier.
-    * Ceiling = 118.3 × 1.064 ≈ 125.9 → 126; floor = envelope min ×
-    * 0.89 ≈ 89.
-    *
-    * r15 re-pin (174 queries, q178–q180 added; post-descent-fix
-    * triplet): clean normalized 111.6 / 111.9 / 119.5.
-    * Ceiling = 119.5 × 1.064 ≈ 127.1 → 127; floor = envelope min ×
-    * 0.89 ≈ 99.
-    */
-  val NormBandSec: (Double, Double) = (99.0, 127.0)
+  /** Seeds the pass orders: pass `p` visits `passOrder(queries, p)`. */
+  val Seed = 1L
 
-  /** Measured inter-run residual of the NORMALIZED total across
-    * same-code clean runs: the r12 clean triplet's normalized totals
-    * (81.0 / 82.6 / 86.3) spread (max−min)/mean = 6.4% — wider than
-    * the r11 header's ±4% estimate, so the error bar uses the
-    * measured figure. Emitted as the systematic component of the
-    * normalized total's error bar; the statistical component (in-JVM
-    * repeat scatter, `repeat_spread_sec`: 6.1–8.0 s on the triplet)
-    * is measured per run and combined in quadrature.
-    */
-  val InterRunSigmaPct = 6.4
+  def passOrder[T](queries: Seq[T], pass: Int): Seq[T] =
+    new Random(Seed * 1000003L + pass).shuffle(queries)
 
-  /** Multi-round ITERATIVE queries whose bench-scale time is
-    * dominated by fixed per-round scheduling (each NN-descent /
-    * fixpoint round is its own AQE barrier chain — q175+q176 schedule
-    * ~30 barriers and read 5–8 s each at sf0.1 while their ×30→×300
-    * soak walls are linear in DATA), not by data cost (r13 verdict
-    * nit #3). Their summed time is emitted per run as
-    * `iterative_overhead_sec` so a future band re-pin reads descent
-    * scheduling as the FLOOR it is instead of as regression headroom
-    * — subtract it before comparing data-cost trends across rounds.
+  /** A query's best successful pass: its wall, its [[TaskMetrics]]
+    * fields, its disk spill and its top-8 stages.
     */
-  val IterativeOverheadQueries: Seq[String] =
-    Seq("q175_knn_graph", "q176_knn_graph_recall", "q179_knn_label_noise",
-      "q180_graph_semdedup", "q181_hnsw_search", "q182_hnsw_recall")
+  final case class Best(sec: Double, fields: String, spillDiskMb: Double, stages: Seq[String])
 
-  /** Host-speed anchor for mechanical per-query normalization (r9
-    * verdict ask #7: the ±13% clean band swallows real per-query
-    * regressions unless deltas are divided by a per-run host-speed
-    * denominator). The anchor is the MEDIAN per-query time of the
-    * registry in the round-9 clean window (BENCH_CLEAN_r9.json:
-    * median 0.293 s over 158 queries) — the median query is
-    * fixed-overhead-dominated and tracks the host window far better
-    * than any single query (q01 moved 1.31× across the r8→r9 windows
-    * where the median moved 1.05× and the total 1.08×). Each bench
-    * run emits `host_speed_vs_clean_r9` = median(this run) / anchor;
-    * divide any per-query delta by it before calling it a regression.
+  /** One query over the passes: each pass's wall in pass order (None
+    * where the pass failed), the first pass's job count, the persisted
+    * RDDs left after its drains, its last failure and its best pass.
     */
-  val CleanMedianAnchorSec = 0.293
+  final case class Run(name: String, passSec: Seq[Option[Double]], firstJobs: Int,
+      leaked: Int, err: String, best: Option[Best]) {
+    def failed: Int = passSec.count(_.isEmpty)
+  }
+
+  /** Warms `queries` on `warmDir` (skipped when it is not a directory),
+    * then runs `passes` seed-shuffled passes over them on `dir`. Returns
+    * one [[Run]] per query, in the order given.
+    */
+  def measure(spark: SparkSession, queries: Seq[(String, QFn)], dir: String,
+      warmDir: String, passes: Int): Seq[Run] = {
+    val sc = spark.sparkContext
+    def run(fn: QFn, d: String): Unit =
+      fn(spark, d).write.format("noop").mode("overwrite").save()
+    // Releases the query's CacheScope blocks and returns how many
+    // persisted RDDs survived. Those are released as well, through the
+    // catalog first so that the next persist of the same plan is not a
+    // cache hit that hides the leak, and no leak skews a later query.
+    def drain(): Int = {
+      CacheScope.drain(blocking = true)
+      val left = sc.getPersistentRDDs.values.toSeq
+      if (left.nonEmpty) {
+        spark.catalog.clearCache()
+        left.foreach(_.unpersist(blocking = true))
+      }
+      left.size
+    }
+    // uncounted: the same generated code on 100× less data, so measured
+    // passes time execution, not JIT and codegen
+    if (new File(warmDir).isDirectory) queries.foreach { case (n, fn) =>
+      try run(fn, warmDir) catch {
+        case e: Throwable => System.err.println(s"[bench] warm-up $n failed: $e")
+      }
+      drain()
+    }
+    val runs = mutable.LinkedHashMap.from(queries.map { case (n, _) => n -> Run(n, Vector.empty, 0, 0, "", None) })
+    TaskMetrics.attached(spark) { tm =>
+      for (p <- 1 to passes; (n, fn) <- passOrder(queries, p)) {
+        // the last run's straggler events land before the reset
+        ListenerDrain.drain(sc); tm.reset()
+        val t0 = System.nanoTime()
+        val e = try { run(fn, dir); "" } catch { case ex: Throwable => ex.toString }
+        val dt = (System.nanoTime() - t0) / 1e9
+        val left = drain()
+        ListenerDrain.drain(sc)
+        val err = if (e.isEmpty && left > 0) s"leaked $left persisted RDD(s) past CacheScope.drain" else e
+        if (err.nonEmpty) System.err.println(s"[bench] $n failed: $err")
+        val r = runs(n)
+        runs(n) = r.copy(passSec = r.passSec :+ Option.when(err.isEmpty)(dt),
+          firstJobs = if (p == 1) tm.jobCount else r.firstJobs,
+          leaked = r.leaked + left, err = if (err.nonEmpty) err else r.err,
+          best = if (err.isEmpty && r.best.forall(dt < _.sec))
+            Some(Best(dt, tm.fields(dt), tm.diskSpill.get / 1048576.0, tm.topStages(8)))
+          else r.best)
+      }
+    }
+    runs.values.toSeq
+  }
+
+  /** A `(lo, hi)` band on the total of best times, valid only for the
+    * SF directory name, registry size and core count it was measured on.
+    */
+  final case class Band(sf: String, queries: Int, cores: Int, lo: Double, hi: Double)
+
+  /** Pinned from three back-to-back runs of the 177-query registry at
+    * sf0.1 on a 4-vCPU, 15 GiB host (totals 95.6, 100.5 and 100.8 s):
+    * lo = 0.86 × the lowest total, hi = 1.25 × the median total.
+    */
+  val Pinned = Band("sf0.1", 177, 4, 82.2, 125.6)
+
+  /** The band's reading of a run that timed `queries` queries in
+    * `total` seconds on `cores` cores. Both edges bite: a total below
+    * the floor is as suspect as one above it, since a query that
+    * silently does less work reads fast.
+    */
+  def verdict(band: Band, sf: String, queries: Int, cores: Int, total: Double): String =
+    if (sf != band.sf) "no-band-for-sf"
+    else if (queries != band.queries) "no-band-for-registry"
+    else if (cores != band.cores) "no-band-for-host"
+    else if (total < band.lo) "below-band-investigate"
+    else if (total <= band.hi) "within-band"
+    else "above-band"
+
+  /** The golden job counts that `observed` does not match, as
+    * (query, golden, observed), in query order.
+    */
+  def jobDiffs(golden: Map[String, Int],
+      observed: Map[String, Int]): Seq[(String, Int, Option[Int])] =
+    golden.toSeq.sorted.collect {
+      case (q, g) if !observed.get(q).contains(g) => (q, g, observed.get(q))
+    }
+
+  /** Queries whose first-pass job count is left out of the golden: it
+    * moved between runs of the same code (q127 40 or 44, q157 35 or 26,
+    * q83 12 or 10) or with the core count (q58 17 → 13 at 2 cores).
+    */
+  val JobsUnchecked: Seq[String] = Seq("q127_curation_ledger", "q157_dup_source_matrix",
+    "q58_incremental_neardup", "q83_dim_truncation")
+
+  /** The job-count golden of the pinned SF, relative to the repo root. */
+  val GoldenPath = "goldens/bench_jobs.sf0.1.json"
+
+  def goldenJobs(): Map[String, Int] =
+    new ObjectMapper().readTree(new File(GoldenPath)).properties().asScala
+      .map(e => e.getKey -> e.getValue.asInt).toMap
 
   /** 1-minute load average, or -1 where the JVM can't read it. */
   def loadAvg1m(): Double =
@@ -167,168 +174,56 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // Host-state sampled at start AND end: the r8 driver-protocol bench
-    // read 130.7 s — 1.7× the clean-host number — because it ran minutes
-    // after a 453 s test suite on the same box. The number itself can't
-    // reveal that; these fields make contamination self-identifying.
+    val passes = sys.env.getOrElse("SPARK_GRAFT_REPEATS", "3").toInt max 1
+    // Host state at start AND end: a run minutes after a test suite on
+    // the same box read 1.7× the clean number (r8), which the number
+    // itself cannot reveal; these fields make contamination visible.
     val loadStart = loadAvg1m(); val jvmsStart = otherJvms()
-    // min-of-N per query: a single sample can't tell a plan regression
-    // from machine contention (the r4 driver bench ran ~1.8× uniformly
-    // inflated vs an identical re-run). The minimum over N in-JVM runs
-    // is the standard noise-robust estimator for a deterministic
-    // workload: contention only ever ADDS time, so the min converges on
-    // the true cost. N is in the JSON so readers know what they got.
-    val repeats = sys.env.getOrElse("SPARK_GRAFT_REPEATS", "3").toInt max 1
+    val sf = new File(sfDir).getName
+    // job counts depend on the data's size, so the golden holds for its
+    // SF only; read before the run so that a missing golden fails fast
+    val golden = if (sf == Pinned.sf) goldenJobs() else Map.empty[String, Int]
     val spark = GraftSession.local()
-    // Bench action: write to the noop sink, not count(). Catalyst prunes
-    // unreferenced projections under count(), so pure-projection queries
-    // would be timed as bare scans; the noop sink evaluates every output
-    // column and discards the rows (no I/O in the measurement).
-    def run(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame, dir: String): Unit =
-      fn(spark, dir).write.format("noop").mode("overwrite").save()
-    // Uncounted warmup: run every query once at sf0.001 (same generated
-    // code, 100× less data) so measured runs reflect execution, not
-    // JIT/codegen compilation — the heavy-codegen queries otherwise pay
-    // 3-5s of one-time compilation inside their own measurement. Warmup
-    // failures don't gate, but a query that only fails at sf0.001 (an
-    // empty-input edge, say) must not vanish silently — name it.
-    try {
-      spark.range(1000000).selectExpr("sum(id * 2)").collect()
-      val warmDir = new java.io.File(new java.io.File(sfDir).getParentFile, "sf0.001")
-      if (warmDir.isDirectory)
-        SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-          try run(fn, warmDir.toString) catch {
-            case e: Throwable => System.err.println(
-              s"[bench] warmup $name failed: ${e.getClass.getSimpleName}: ${e.getMessage}")
-          }
-          CacheScope.drain(blocking = true); spark.catalog.clearCache()
-        }
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] warmup skipped: ${e.getMessage}")
-    }
-    // A failed query must NOT masquerade as a fast one: its time is
-    // recorded but its name also lands in "errors", so a regressed
-    // round can't read as a performance win.
-    val failed = scala.collection.mutable.LinkedHashSet.empty[String]
-    val resultTimes = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      val timed = (1 to repeats).map { _ =>
-        val t0 = System.nanoTime()
-        val ok =
-          try { run(fn, sfDir); true } catch {
-            case e: Throwable =>
-              failed += name
-              System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-              false
-          }
-        val dt = (System.nanoTime() - t0) / 1e9
-        // outside the timed section: drop caches a query persisted for
-        // its own multi-consumer stages (signature tables etc.) so later
-        // runs are neither helped by warm blocks nor squeezed by
-        // accumulated ones
-        CacheScope.drain(blocking = true); spark.catalog.clearCache()
-        (dt, ok)
-      }
-      // min over SUCCESSFUL runs only: a repeat that fast-fails (e.g. a
-      // transient FS error after 0.3 s) must not undercut real
-      // measurements and read as a perf win. Only when every repeat
-      // failed does the failure time stand — and then the name is in
-      // "errors" anyway. The full sorted sample is kept (not just the
-      // min) so the in-JVM repeat scatter is quantifiable below.
-      val good = timed.collect { case (dt, true) => dt }.sorted
-      name -> (if (good.nonEmpty) good else Seq(timed.map(_._1).min))
-    }.toMap
-    val results = resultTimes.view.mapValues(_.head).toMap
-    val qs = results.map { case (k, v) => s"${Json.str(k)}:$v" }
-      .mkString("{", ",", "}")
-    val errs = failed.map(Json.str).mkString("[", ",", "]")
-    val total = if (results.nonEmpty) results.values.sum else 0.0
+    val warmDir = new File(new File(sfDir).getParentFile, "sf0.001").toString
+    val runs = measure(spark, SparkEntry.queries.toSeq.sortBy(_._1), sfDir, warmDir, passes)
+    spark.stop()
     val loadEnd = loadAvg1m(); val jvmsEnd = otherJvms()
-    // Self-normalization (r9 ask #7): per-run host-speed denominator so
-    // per-query deltas across rounds are adjudicable mechanically —
-    // normalized_delta = (q_r10/host_r10) / (q_r9/host_r9). The median
-    // is robust to a handful of genuinely-regressed queries; a single
-    // reference query is emitted too for cross-checking.
-    val sorted = results.values.toSeq.sorted
-    val medianSec =
-      if (sorted.isEmpty) 0.0
-      else if (sorted.size % 2 == 1) sorted(sorted.size / 2)
-      else (sorted(sorted.size / 2 - 1) + sorted(sorted.size / 2)) / 2
-    val refQ = "q01_pricing_summary"
-    val refSec = results.getOrElse(refQ, 0.0)
-    // the anchor was measured at sf0.1; at any other SF the median
-    // reflects data size, not host speed → emit -1 (not-applicable)
-    val hostSpeed =
-      if (medianSec > 0 && new java.io.File(sfDir).getName == CleanBandSf)
-        medianSec / CleanMedianAnchorSec
-      else -1.0
-    // Normalized total + error bar (r11 ask #4): the total in
-    // r9-clean-window seconds, with a statistical component measured
-    // from THIS run's repeats (sum of per-query second-best minus sum
-    // of best = the in-JVM scatter the min estimator suppressed) and
-    // the measured inter-run systematic residual, combined in
-    // quadrature.
-    val normTotal = if (hostSpeed > 0) total / hostSpeed else -1.0
-    val repeatSpreadSec = resultTimes.values
-      .map(ts => (if (ts.size > 1) ts(1) else ts.head) - ts.head).sum
-    val normErrSec =
-      if (normTotal > 0)
-        math.sqrt(math.pow(normTotal * InterRunSigmaPct / 100, 2) +
-          math.pow(repeatSpreadSec / hostSpeed, 2))
-      else -1.0
-    // Envelope verdict: keyed on the NORMALIZED total when calibration
-    // is available (r11 ask #4 — the raw band conflates host window
-    // with code trend); raw-band fallback otherwise. BOTH edges are
-    // enforced (r12 ADVICE): a total below the floor is as suspicious
-    // as one above it — queries silently doing less work read "fast".
-    // The above-band strings differ by path: a NORMALIZED exceedance
-    // points at a code regression (normalization removes host-window
-    // effects by construction), while a raw-fallback exceedance may
-    // just be host contention.
-    val verdict =
-      if (!new java.io.File(sfDir).getName.equals(CleanBandSf))
-        "no-band-for-sf"
-      else if (results.size != CleanBandQueries) "no-band-for-registry"
-      else if (normTotal > 0) {
-        if (normTotal < NormBandSec._1) "below-norm-band-investigate"
-        else if (normTotal <= NormBandSec._2) "within-clean-band"
-        else "above-norm-band"
-      } else {
-        if (total < CleanBandSec._1) "below-clean-band-investigate"
-        else if (total <= CleanBandSec._2) "within-clean-band-raw"
-        else "above-clean-band-host-contended"
-      }
-    val iterOverheadSec =
-      IterativeOverheadQueries.flatMap(results.get).sum
-    val normField =
-      f""","iterative_overhead_sec":$iterOverheadSec%.1f""" +
-      f""","ref_query":${Json.str(refQ)},"ref_sec":$refSec%.3f""" +
-      f""","median_query_sec":$medianSec%.3f,"host_speed_vs_clean_r9":$hostSpeed%.3f""" +
-      f""","normalized_total_sec":$normTotal%.1f,"normalized_total_err_sec":$normErrSec%.1f""" +
-      f""","repeat_spread_sec":$repeatSpreadSec%.1f""" +
-      s""","norm_band_sec":[${NormBandSec._1},${NormBandSec._2}]"""
-    val hostField =
-      s""","load_avg_1m_start":$loadStart,"load_avg_1m_end":$loadEnd""" +
-      s""","other_jvms_start":$jvmsStart,"other_jvms_end":$jvmsEnd""" +
-      s""","clean_band_sec":[${CleanBandSec._1},${CleanBandSec._2}]""" +
-      s""","clean_band_queries":$CleanBandQueries,"envelope_verdict":${Json.str(verdict)}""" +
-      normField
-    val fullLine = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":${Json.str(sfDir)},"errors":$errs,"action":"noop-sink","repeats":$repeats$hostField,"note":"per-query time is the MIN over 'repeats' in-JVM runs (contention-robust); r3 switched the action from count() to a noop sink so projections actually evaluate"}"""
-    println(fullLine)
-    // The driver stores only the TAIL of stdout (~2000 chars), and the
-    // 174-entry per-query dict pushes the full line's head out of it —
-    // r15's stamped BENCH_r15.json carried an unparseable mid-JSON
-    // fragment. Two mitigations (r15 verdict hygiene ask): the full
-    // line is ALSO written to BENCH_FULL_latest.json in the launch
-    // directory (committed next round, so the per-query map survives
-    // as a file even when the stdout tail truncates), and the compact
-    // LAST line — short enough to always fit inside the tail whole —
-    // names that file so a reader of the stamp knows where to look.
+
+    val total = runs.flatMap(_.best).map(_.sec).sum
+    val envelope = verdict(Pinned, sf, runs.count(_.best.nonEmpty), GraftSession.cores, total)
+    val diffs = jobDiffs(golden, runs.map(r => r.name -> r.firstJobs).toMap)
+
+    def num(v: Option[Double]) = v.fold("null")(s => f"$s%.3f")
+    def names(ns: Seq[String]) = ns.map(Json.str).mkString("[", ",", "]")
+    val records = runs.map { r =>
+      s"""{"query":${Json.str(r.name)},"sec":${num(r.best.map(_.sec))},""" +
+        s""""passes_sec":${r.passSec.map(num).mkString("[", ",", "]")},""" +
+        s""""first_pass_jobs":${r.firstJobs},${r.best.fold("")(_.fields + ",")}""" +
+        s""""persisted_after_drain":${r.leaked},"err":${Json.str(r.err)}}"""
+    }
+    val diffJson = diffs.map { case (q, g, o) =>
+      s"""{"query":${Json.str(q)},"golden":$g,"observed":${o.fold("null")(_.toString)}}"""
+    }.mkString("[", ",", "]")
+    val summary =
+      s""""value":$total,"unit":"sec","sf":${Json.str(sfDir)},"n_queries":${runs.size}""" +
+        s""","errors":${names(runs.filter(_.err.nonEmpty).map(_.name))}""" +
+        s""","persisted_after_drain":${runs.map(_.leaked).sum}""" +
+        s""","action":"noop-sink","passes":$passes,"seed":$Seed,"cores":${GraftSession.cores}""" +
+        s""","load_avg_1m_start":$loadStart,"load_avg_1m_end":$loadEnd""" +
+        s""","other_jvms_start":$jvmsStart,"other_jvms_end":$jvmsEnd""" +
+        s""","band_key":{"sf":${Json.str(Pinned.sf)},"queries":${Pinned.queries},"cores":${Pinned.cores}}""" +
+        s""","band_sec":[${Pinned.lo},${Pinned.hi}],"envelope_verdict":${Json.str(envelope)}""" +
+        s""","jobs_golden_checked":${golden.size},"jobs_golden_diff":$diffJson""" +
+        s""","jobs_unchecked":${names(JobsUnchecked)}"""
+    records.foreach(println)
+    // Only the tail of stdout survives some collectors, so the full
+    // record also goes to a file, and the compact last line names it.
     val fullPath = try {
-      val p = java.nio.file.Paths.get("BENCH_FULL_latest.json").toAbsolutePath
-      java.nio.file.Files.write(p, (fullLine + "\n").getBytes("UTF-8"))
+      val p = Paths.get("BENCH_FULL_latest.json").toAbsolutePath
+      Files.write(p, s"""{"metric":"total",$summary,"per_query":[\n${records.mkString(",\n")}\n]}\n"""
+        .getBytes("UTF-8"))
       p.toString
     } catch { case e: Exception => s"unwritable: ${e.getMessage}" }
-    println(s"""{"metric":"total_compact","value":$total,"unit":"sec","n_queries":${results.size},"sf":${Json.str(sfDir)},"errors":$errs,"repeats":$repeats$hostField,"full_json":${Json.str(fullPath)}}""")
-    spark.stop()
+    println(s"""{"metric":"total_compact",$summary,"full_json":${Json.str(fullPath)}}""")
   }
 }

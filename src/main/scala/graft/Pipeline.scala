@@ -98,13 +98,13 @@ object Pipeline {
       s"gateMode must be enforce|annotate, got '$gateMode'")
     val nShuffle = Scale.soakPartitions(spark)
     graft.functions.VectorExpressions.register(spark)
-    Scale.withTaskMetrics(spark)(dag(spark, _, docsDir, outDir, benchDir,
+    TaskMetrics.attached(spark)(dag(spark, _, docsDir, outDir, benchDir,
       seqLen, gateMode, nShuffle))
   }
 
   // per-stage attribution: the task metrics are reset around each
   // stage's materialization barrier
-  private def dag(spark: SparkSession, tm: Scale.TaskMetrics,
+  private def dag(spark: SparkSession, tm: TaskMetrics,
       docsDir: String, outDir: String, benchDir: String, seqLen: Int,
       gateMode: String, nShuffle: String): Map[String, Long] = {
     val docsMb = {

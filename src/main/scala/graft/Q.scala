@@ -16,12 +16,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * intermediate (a shingle/signature/profile relation feeding several
   * branches of one plan). The returned DataFrame is lazy, so the builder
   * cannot unpersist without recomputing the shared stage — lifetime
-  * management belongs to the runner. The registry runners (Verify,
-  * Bench) call `spark.catalog.clearCache()` after each query; a library
-  * caller embedding a single query should do the same (or unpersist via
-  * the catalog) once its action completes. Unreleased blocks degrade
-  * gracefully regardless: persist() defaults to MEMORY_AND_DISK, whose
-  * LRU eviction spills rather than OOMs.
+  * management belongs to the runner. Builders register such caches with
+  * [[CacheScope]], and the registry runners (Verify, Bench, Scale) call
+  * `CacheScope.drain()` after each query's action; a library caller
+  * embedding a single query should do the same. `clearCache()` is not
+  * enough: a `CacheScope.checkpointed` block lives outside the
+  * CacheManager, so only the drain releases it.
   */
 final case class Q(
     name: String,

@@ -1,12 +1,5 @@
 package graft
 
-import java.util.concurrent.ConcurrentHashMap
-import java.util.concurrent.atomic.AtomicLong
-
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.graft.ListenerDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -58,108 +51,6 @@ object Scale {
     "q148_threshold_sweep", "q157_dup_source_matrix",
     "q102_bloom_contamination")
 
-  /** Task metrics of every job that runs while attached — the one
-    * task-metrics listener the runners share. Counters sum over all
-    * tasks since the last [[reset]]; drain the listener bus
-    * (`ListenerDrain.drain`) before reading them, since events post
-    * asynchronously.
-    */
-  final class TaskMetrics extends SparkListener {
-    val shuffleRead, shuffleWrite, memSpill, diskSpill, inputBytes =
-      new AtomicLong
-    val runMs, cpuNs, gcMs = new AtomicLong
-    // per job: (start, end) event times in ms; end -1 until it ends
-    private val jobs = new ConcurrentHashMap[Int, Array[Long]]()
-    // per stage: task ms, task count, input bytes and the operator name.
-    // inputBytes accumulates RAW bytes (divided once at print): per-task
-    // division truncated every sub-1MB task to 0, and input_mb 0 vs >0
-    // is the cache-vs-scan discriminator
-    private final class StageAgg {
-      val taskMs, nTasks, inputBytes = new AtomicLong
-      @volatile var name = ""
-    }
-    private val stages = new ConcurrentHashMap[Int, StageAgg]()
-    private def stage(id: Int) = stages.computeIfAbsent(id, _ => new StageAgg)
-
-    def reset(): Unit = {
-      Seq(shuffleRead, shuffleWrite, memSpill, diskSpill, inputBytes,
-        runMs, cpuNs, gcMs).foreach(_.set(0))
-      jobs.clear(); stages.clear()
-    }
-
-    override def onJobStart(js: SparkListenerJobStart): Unit =
-      jobs.put(js.jobId, Array(js.time, -1L))
-    override def onJobEnd(je: SparkListenerJobEnd): Unit =
-      Option(jobs.get(je.jobId)).foreach(_(1) = je.time)
-
-    override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
-      val m = te.taskMetrics
-      if (m != null) {
-        shuffleRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-        shuffleWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        memSpill.addAndGet(m.memoryBytesSpilled)
-        diskSpill.addAndGet(m.diskBytesSpilled)
-        inputBytes.addAndGet(m.inputMetrics.bytesRead)
-        runMs.addAndGet(m.executorRunTime)
-        // run − cpu = time blocked inside tasks (lock contention,
-        // cache-fill races, fetch wait)
-        cpuNs.addAndGet(m.executorCpuTime)
-        gcMs.addAndGet(m.jvmGCTime)
-        if (te.taskInfo != null) {
-          val s = stage(te.stageId)
-          s.taskMs.addAndGet(te.taskInfo.duration)
-          s.nTasks.incrementAndGet()
-          s.inputBytes.addAndGet(m.inputMetrics.bytesRead)
-        }
-      }
-    }
-
-    // the stage NAME under AQE is just the materialization call site;
-    // the RDD scope names inside the stage are the operators (Exchange,
-    // WholeStageCodegen, ObjectHashAggregate …). CAVEAT: the stage
-    // graph is static lineage, so a cached relation's parent RDDs
-    // (FileScanRDD, Generate, …) appear in the name even when every
-    // read is served from cache blocks — input_mb tells them apart
-    // (block-manager reads count as input; parquet scans here report 0)
-    override def onStageCompleted(sc: SparkListenerStageCompleted): Unit =
-      stage(sc.stageInfo.stageId).name = sc.stageInfo.rddInfos
-        .map(_.name.takeWhile(_ != '\n')).distinct
-        .filterNot(n => n.isEmpty || n.startsWith("Shuffled") || n == "MapPartitionsRDD")
-        .mkString("|")
-
-    def jobCount: Int = jobs.size
-    /** Σ job walls in seconds (jobs still running count 0). */
-    def inJobSec: Double = jobs.values.asScala
-      .map(j => if (j(1) > 0) (j(1) - j(0)) / 1e3 else 0.0).sum
-
-    /** The counters as JSON fields of a query line whose action took
-      * `wallSec`: MB of shuffle and spill, then jobs, in-job seconds, the
-      * driver gap (wall − Σ job walls) and task run/CPU/GC seconds.
-      */
-    def fields(wallSec: Double): String = {
-      def mb(v: AtomicLong) = v.get / 1048576.0
-      f""""shuffle_read_mb":${mb(shuffleRead)}%.1f,"shuffle_write_mb":${mb(shuffleWrite)}%.1f,"spill_mem_mb":${mb(memSpill)}%.1f,"spill_disk_mb":${mb(diskSpill)}%.1f,"jobs":$jobCount,"in_job_sec":$inJobSec%.3f,"driver_gap_sec":${wallSec - inJobSec}%.3f,"task_run_sec":${runMs.get / 1e3}%.3f,"task_cpu_sec":${cpuNs.get / 1e9}%.3f,"gc_sec":${gcMs.get / 1e3}%.3f"""
-    }
-
-    /** The `k` stages with the most task time, as JSON lines. Stage
-      * task-seconds ≈ wall × concurrency, so shares, not absolutes, are
-      * the signal.
-      */
-    def topStages(k: Int): Seq[String] =
-      stages.asScala.toSeq.sortBy(-_._2.taskMs.get).take(k).map { case (id, s) =>
-        f"""{"stage":$id,"task_sec":${s.taskMs.get / 1e3}%.1f,"n_tasks":${s.nTasks.get},"input_mb":${s.inputBytes.get / 1048576},"name":${Json.str(s.name)}}"""
-      }
-  }
-
-  /** Runs `body` with a [[TaskMetrics]] attached to the session's
-    * context and removes it when `body` returns or throws.
-    */
-  def withTaskMetrics[T](spark: SparkSession)(body: TaskMetrics => T): T = {
-    val tm = new TaskMetrics
-    spark.sparkContext.addSparkListener(tm)
-    try body(tm) finally spark.sparkContext.removeSparkListener(tm)
-  }
-
   /** Sets the soak's shuffle partitioning on `spark` and returns it:
     * 2× cores, the 64p rule (r10 SCALE.md §1 sweep, shipped r11) — the
     * banding/inverted-index family zero-spills at tasks ≈ 2× cores when
@@ -182,73 +73,27 @@ object Scale {
   def soak(sfDir: String, names: Seq[String]): Unit = {
     val spark = GraftSession.local()
     val nShuffle = soakPartitions(spark)
-    var totalSpillDiskMb = 0.0
-    withTaskMetrics(spark) { tm =>
-      // JIT/codegen warmup on the tiny SF so measured runs are execution
-      // (same policy as Bench); warmup failures are ignored, the measured
-      // run surfaces them
-      names.foreach { n =>
-        try SparkEntry.queries(n)(spark, "/root/testdata/sf0.001")
-          .write.format("noop").mode("overwrite").save()
-        catch { case _: Throwable => () }
-        CacheScope.drain(); spark.catalog.clearCache()
-      }
-
-      // SPARK_GRAFT_REPEATS=N: run each query N times IN-JVM and report
-      // the min wall (Bench's noise-robust estimator — ×300 wall on the
-      // heavy spillers is bimodal and the host window drifts within a
-      // session, so single-sample soak A/Bs mislead). Every counter and
-      // the stage table come from the min-wall SUCCESSFUL repeat alone:
-      // a failing repeat can abort early with a tiny wall, so letting it
-      // win the min would report a failed run's counters as the query's
-      // cost. err is reported only when every repeat failed.
-      val repeats = sys.env.getOrElse("SPARK_GRAFT_REPEATS", "1").toInt max 1
-      var totalSec = 0.0
-      names.foreach { n =>
-        var best = Double.MaxValue
-        var bestFields = new TaskMetrics().fields(0.0)
-        var bestSpillMb = 0.0
-        var bestStages = Seq.empty[String]
-        var lastErr = ""
-        var nFailed = 0
-        (1 to repeats).foreach { _ =>
-          // drains the warmup's or the last repeat's straggler events
-          // before the reset, so they cannot land in this repeat
-          ListenerDrain.drain(spark.sparkContext); tm.reset()
-          val t0 = System.nanoTime()
-          val e =
-            try { SparkEntry.queries(n)(spark, sfDir)
-              .write.format("noop").mode("overwrite").save(); "" }
-            catch { case ex: Throwable => ex.getClass.getSimpleName }
-          val dt = (System.nanoTime() - t0) / 1e9
-          CacheScope.drain(); spark.catalog.clearCache()
-          ListenerDrain.drain(spark.sparkContext)
-          if (e.nonEmpty) { lastErr = e; nFailed += 1 }
-          else if (dt < best) {
-            best = dt
-            bestFields = tm.fields(dt)
-            bestSpillMb = tm.diskSpill.get / 1048576.0
-            bestStages = tm.topStages(8)
-          }
-        }
-        val allFailed = nFailed == repeats
-        val sec = if (allFailed) 0.0 else best
-        totalSec += sec
-        totalSpillDiskMb += bestSpillMb
-        println(f"""{"query":${Json.str(n)},"sec":$sec%.3f,$bestFields,"repeats":$repeats,"failed_repeats":$nFailed,"shuffle_partitions":$nShuffle,"err":${Json.str(if (allFailed) lastErr else "")}}""")
-        bestStages.foreach(println)
-      }
-      println(f"""{"metric":"scale_total","sec":$totalSec%.1f,"sf":${Json.str(sfDir)},"n_queries":${names.size},"shuffle_partitions":$nShuffle}""")
-    }
+    // passes: ×300 wall on the heavy spillers is bimodal and the host
+    // window drifts within a session, so single-sample A/Bs mislead
+    val repeats = sys.env.getOrElse("SPARK_GRAFT_REPEATS", "1").toInt max 1
+    val runs = Bench.measure(spark, names.map(n => n -> SparkEntry.queries(n)), sfDir,
+      "/root/testdata/sf0.001", repeats)
     spark.stop()
+    runs.foreach { r =>
+      val fields = r.best.fold(new TaskMetrics().fields(0.0))(_.fields)
+      val err = if (r.best.isEmpty) r.err else ""
+      println(f"""{"query":${Json.str(r.name)},"sec":${r.best.fold(0.0)(_.sec)}%.3f,$fields,"repeats":$repeats,"failed_repeats":${r.failed},"shuffle_partitions":$nShuffle,"err":${Json.str(err)}}""")
+      r.best.foreach(_.stages.foreach(println))
+    }
+    val totalSec = runs.flatMap(_.best).map(_.sec).sum
+    println(f"""{"metric":"scale_total","sec":$totalSec%.1f,"sf":${Json.str(sfDir)},"n_queries":${names.size},"shuffle_partitions":$nShuffle}""")
     // SPARK_GRAFT_ASSERT_NOSPILL=1: the zero-spill claim as an exit
     // code — tools/soak.sh --certify uses it to certify that the default
     // partition sizing reproduces the ×1000 zero-spill config without
-    // hand flags. Asserts on the min-wall repeats' disk spill.
-    if (sys.env.get("SPARK_GRAFT_ASSERT_NOSPILL").contains("1") &&
-      totalSpillDiskMb > 0.0) {
-      System.err.println(
-        f"[scale] NOSPILL ASSERT FAILED: $totalSpillDiskMb%.1f MB disk spill")
+    // hand flags. Asserts on the min-wall passes' disk spill.
+    val spillDiskMb = runs.flatMap(_.best).map(_.spillDiskMb).sum
+    if (sys.env.get("SPARK_GRAFT_ASSERT_NOSPILL").contains("1") && spillDiskMb > 0.0) {
+      System.err.println(f"[scale] NOSPILL ASSERT FAILED: $spillDiskMb%.1f MB disk spill")
       sys.exit(1)
     }
   }

@@ -24,13 +24,11 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
       // queries persist their own multi-consumer stages (signature
-      // tables etc.) through CacheScope; drop them so 157 queries in
-      // one session don't accumulate cached blocks into eviction
-      // churn — and don't skew later queries' AQE size estimates.
-      // clearCache() stays as the belt-and-braces sweep for anything
-      // cached outside the scope.
+      // tables etc.) through CacheScope; drop them so the registry in
+      // one session doesn't accumulate cached blocks into eviction
+      // churn — and doesn't skew later queries' AQE size estimates
+      // (RegistrySpec: after drain no query leaves a persisted RDD)
       CacheScope.drain()
-      spark.catalog.clearCache()
     }
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${Json.str(k)}: ${Json.str(v)}" }.mkString("{", ",", "}")

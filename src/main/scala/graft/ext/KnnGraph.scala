@@ -919,12 +919,11 @@ object KnnGraph {
     // flagged ppm. Integer end-to-end (counts, deterministic
     // smallest-label tie-break) — hash-exact on both engines.
     //
-    // Scale: the descent dominates (shared machinery with q175 — at
-    // bench scale this query sits in Bench.IterativeOverheadQueries
-    // with it); the propagation itself is one id-only hash join +
-    // count aggregate over the 5n-row edge list. The graph DIAL moves
-    // the verdict: propagating over the LSH init alone vs the shipped
-    // 2-round graph flags different nodes (KnnGraphSpec pins it).
+    // Scale: the descent dominates (shared machinery with q175); the
+    // propagation itself is one id-only hash join + count aggregate
+    // over the 5n-row edge list. The graph DIAL moves the verdict:
+    // propagating over the LSH init alone vs the shipped 2-round graph
+    // flags different nodes (KnnGraphSpec pins it).
     Q(
       "q179_knn_label_noise",
       s"""WITH $descentDuck,
@@ -985,10 +984,9 @@ object KnnGraph {
     // recall-vs-n² trade is the entire reason SemDeDup builds a graph
     // instead of scoring all pairs.
     //
-    // Scale: descent as q175 (bench time in IterativeOverheadQueries);
-    // past it everything is id-shaped — threshold filter on the 5n
-    // edge list, CC over the dup-rate-sized participant subgraph, one
-    // cluster-size window.
+    // Scale: descent as q175; past it everything is id-shaped —
+    // threshold filter on the 5n edge list, CC over the dup-rate-sized
+    // participant subgraph, one cluster-size window.
     Q(
       "q180_graph_semdedup",
       // the dedup bar is DERIVED (r16, verdict ask #3): τ = the p99

@@ -935,7 +935,7 @@ object TextAnalysis {
          |FROM j GROUP BY doc_id""".stripMargin) { (s, d) =>
       val (w, _) = bpeTrain(s, d)
       // the final vocabulary stays persisted inside the returned plan;
-      // the registry runners clearCache() after each query (Q contract)
+      // the registry runners CacheScope.drain() after each query (Q contract)
       val enc = w.select(col("word"),
         size(col("toks")).cast("long").as("n_toks"),
         length(col("word")).cast("long").as("n_wchars"))

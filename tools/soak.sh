@@ -13,8 +13,11 @@
 #     (×1000 ≈ 3.3 GB on disk ran clean at 48 GB: ~15× — snappy
 #     parquet decompresses ~3-4× and the shingle explode multiplies
 #     another ~4×), clamped to [8, 48] GB
+#   - passes: SPARK_GRAFT_REPEATS (default 2 here) is the number of
+#     seed-shuffled passes over the named queries (Bench.measure, the
+#     loop Bench shares); each query reports its best pass
 #   - --certify: turn on the NOSPILL assert (Scale exits non-zero if
-#     the min-wall repeats spilled to disk), making "zero spill" a
+#     the best passes spilled to disk), making "zero spill" a
 #     checkable exit code — the certification mode for the ×1000
 #     inverted-index family, where data-sized heap hits the 48 GB cap
 #     (the exact r10-proven config). At smaller scales some spill is
