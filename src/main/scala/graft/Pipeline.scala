@@ -45,7 +45,7 @@ import graft.stream.StreamingCuration
   * also a correctness smoke: every stage's kill count is visible, and
   * the packed output + manifest land under `outDir` as real parquet.
   *
-  *   runMain graft.Pipeline <docsDir> <outDir> [benchDir] [seqLen] [gateMode]
+  *   runMain graft.Pipeline <docsDir> <outDir> [benchDir] [seqLen]
   *   runMain graft.Pipeline lake <docsDir> <outDir> [benchDir] [perTrigger] [seqLen]
   *
   * `lake` runs the streaming→batch composition across the lake
@@ -53,19 +53,13 @@ import graft.stream.StreamingCuration
   *
   * Defaults: benchDir=/root/testdata/sf0.001 (the decontamination
   * benchmark — its distinct 5-gram shingles broadcast, the q50/q102
-  * posture), seqLen=2048 (q60's budget), gateMode=enforce. Env:
-  * SPARK_GRAFT_CPUS, SPARK_GRAFT_SHUFFLE (defaults to the soak
-  * 2×cores rule), SPARK_DRIVER_MEM via tools/run_main.sh.
+  * posture), seqLen=2048 (q60's budget). Env: SPARK_GRAFT_CPUS,
+  * SPARK_GRAFT_SHUFFLE (defaults to the soak 2×cores rule, set for the
+  * DAG only), SPARK_DRIVER_MEM via tools/run_main.sh.
   *
-  * `gateMode=annotate` runs the quality gate in SHADOW mode: verdicts
-  * are computed and counted (the ledger still reports n_quality) but
-  * rejects flow through — the posture a deployment uses while tuning
-  * thresholds on a new corpus. It is also what makes the ×300
-  * SCALE run meaningful: ScaleGen copies are vocabulary-disjoint BY
-  * DESIGN (dup structure scales exactly ×copies), which renames the
-  * stopwords the Gopher rules look for, so `enforce` would kill every
-  * copy at stage A and starve the downstream stages of volume — a
-  * fixture artifact (the twin-clique class), not a pipeline property.
+  * The quality gate always enforces: rejects stop at stage A. A
+  * scaled corpus keeps its volume past the gate when it is built with
+  * `ScaleGen … stopsafe`, whose copies keep the Gopher stopwords.
   *
   * Scan-discipline accounting: each stage line carries
   * `corpus_text_scans` — the number of documents.parquet scan nodes
@@ -83,30 +77,34 @@ object Pipeline {
     else {
       val spark = GraftSession.local()
       run(spark, args(0), args(1), args.lift(2).getOrElse("/root/testdata/sf0.001"),
-        args.lift(3).map(_.toInt).getOrElse(2048), args.lift(4).getOrElse("enforce"))
+        args.lift(3).map(_.toInt).getOrElse(2048))
       CacheScope.drain()
       spark.stop()
     }
 
   /** The DAG body, callable in-session ([[lake]] runs it over the
     * parquet its streaming phase just landed). Returns the ledger counts
-    * so a composing caller can reconcile them against its own.
+    * so a composing caller can reconcile them against its own. The
+    * soak's shuffle partitioning ([[Scale.soakPartitions]]) holds for
+    * the DAG only; the caller's session gets its own setting back.
     */
   def run(spark: SparkSession, docsDir: String, outDir: String,
-      benchDir: String, seqLen: Int, gateMode: String): Map[String, Long] = {
-    require(gateMode == "enforce" || gateMode == "annotate",
-      s"gateMode must be enforce|annotate, got '$gateMode'")
-    val nShuffle = Scale.soakPartitions(spark)
-    graft.functions.VectorExpressions.register(spark)
-    TaskMetrics.attached(spark)(dag(spark, _, docsDir, outDir, benchDir,
-      seqLen, gateMode, nShuffle))
+      benchDir: String, seqLen: Int): Map[String, Long] = {
+    val key = "spark.sql.shuffle.partitions"
+    val saved = spark.conf.getOption(key)
+    try {
+      val nShuffle = Scale.soakPartitions(spark)
+      graft.functions.VectorExpressions.register(spark)
+      TaskMetrics.attached(spark)(dag(spark, _, docsDir, outDir, benchDir,
+        seqLen, nShuffle))
+    } finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
   // per-stage attribution: the task metrics are reset around each
   // stage's materialization barrier
   private def dag(spark: SparkSession, tm: TaskMetrics,
       docsDir: String, outDir: String, benchDir: String, seqLen: Int,
-      gateMode: String, nShuffle: String): Map[String, Long] = {
+      nShuffle: String): Map[String, Long] = {
     val docsMb = {
       def sz(f: java.io.File): Long =
         if (f.isDirectory) f.listFiles().map(sz).sum else f.length()
@@ -169,10 +167,8 @@ object Pipeline {
       CacheScope.eager(m)
     }
     val nRaw = meta.count()
-    val nQuality = meta.filter(col("quality_pass")).count()
-    // annotate = shadow gate: verdicts counted, rejects flow through
-    val quality =
-      if (gateMode == "enforce") meta.filter(col("quality_pass")) else meta
+    val quality = meta.filter(col("quality_pass"))
+    val nQuality = quality.count()
 
     // ── B: exact dedup (q34/q88's decision) — meta only ────────────────
     val exact = stage("B_exact_dedup") {
@@ -285,7 +281,7 @@ object Pipeline {
     // stage's optimized plan — the claim is exactly 3 (enrich,
     // decontaminate, materialize), whatever the byte counters say
     val textScans = stageRows.map(_._3).sum
-    println(f"""{"metric":"pipeline","docs_dir":${Json.str(docsDir)},"gate_mode":${Json.str(gateMode)},"docs_on_disk_mb":$docsMb%.1f,"n_raw":$nRaw,"n_quality":$nQuality,"n_exact_canonical":$nExact,"n_neardup_canonical":$nCanon,"n_decontaminated":$nClean,"n_train":$nTrain,"n_packs":$nPacks,"packed_tokens":$nTokens,"seq_len":$seqLen,"text_bearing_scans":$textScans,"total_sec":${stageRows.map(_._2).sum}%.1f,"shuffle_partitions":$nShuffle}""")
+    println(f"""{"metric":"pipeline","docs_dir":${Json.str(docsDir)},"docs_on_disk_mb":$docsMb%.1f,"n_raw":$nRaw,"n_quality":$nQuality,"n_exact_canonical":$nExact,"n_neardup_canonical":$nCanon,"n_decontaminated":$nClean,"n_train":$nTrain,"n_packs":$nPacks,"packed_tokens":$nTokens,"seq_len":$seqLen,"text_bearing_scans":$textScans,"total_sec":${stageRows.map(_._2).sum}%.1f,"shuffle_partitions":$nShuffle}""")
     Map(
       "n_raw" -> nRaw, "n_quality" -> nQuality,
       "n_exact_canonical" -> nExact, "n_neardup_canonical" -> nCanon,
@@ -305,7 +301,7 @@ object Pipeline {
     *     discipline: downstream consumers partition-prune to
     *     `verdict=accepted` and never re-read rejects).
     *  2. **E2 (batch)**: the curation DAG ([[run]]) runs over the LANDED
-    *     accepted partition in `enforce` mode.
+    *     accepted partition.
     *
     * The input corpus is SPLIT by doc-id hash: the even half plays the
     * ALREADY-INGESTED corpus (its MinHash signature table, its IVF-PQ
@@ -413,13 +409,13 @@ object Pipeline {
     val nAccepted = lakeCounts.getOrElse("accepted", 0L)
 
     // ── E2: land the accepted partition as a documents table and run
-    // the batch DAG over it in ENFORCE mode ───────────────────────────
+    // the batch DAG over it ───────────────────────────────────────────
     val landed = s"$outDir/landed"
     spark.read.parquet(s"$lake/verdict=accepted")
       .select("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$landed/documents.parquet")
     val t1 = System.nanoTime()
-    val p = run(spark, landed, s"$outDir/curated", benchDir, seqLen, "enforce")
+    val p = run(spark, landed, s"$outDir/curated", benchDir, seqLen)
     val batchSec = (System.nanoTime() - t1) / 1e9
 
     // ── reconciliation ────────────────────────────────────────────────

@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** One registered engine capability: a Spark query over the test tables
-  * plus (when SQL-expressible) an equivalent DuckDB oracle query the
-  * driver hash-compares against (see SparkEntry).
+  * plus an equivalent DuckDB oracle query the driver hash-compares
+  * against (see SparkEntry). Every query carries one.
   *
   * Column names/types must line up between `fn`'s result and `oracle` —
   * the driver sorts columns by name and hashes values, so every computed
@@ -26,16 +26,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 final case class Q(
     name: String,
     fn: (SparkSession, String) => DataFrame,
-    oracle: Option[String])
+    oracle: String)
 
 object Q {
   def apply(name: String, sql: String)(
       fn: (SparkSession, String) => DataFrame): Q =
-    Q(name, fn, Some(sql))
-
-  /** Non-SQL-expressible op: the driver records a weaker rows-only check. */
-  def noOracle(name: String)(fn: (SparkSession, String) => DataFrame): Q =
-    Q(name, fn, None)
+    Q(name, fn, sql)
 }
 
 /** Minimal JSON string escaping shared by the driver-facing mains

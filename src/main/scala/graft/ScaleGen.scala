@@ -5,10 +5,8 @@ import org.apache.spark.sql.functions._
 /** Builds the soak fixtures ([[Scale]]):
   *
   *   runMain graft.ScaleGen <srcSfDir> <outDir> <copies> [mode]
-  *   runMain graft.ScaleGen clustered <outDir> <n> [k=32] [sigmaX1000=80] [ampX1000=350]
   *
-  * The first form writes a scaled-up copy of the generated test tables;
-  * `clustered` writes a clustered embedding corpus ([[clustered]]).
+  * writes a scaled-up copy of the generated test tables.
   *
   * Construction: each copy is an ISOMORPHIC, VOCABULARY-DISJOINT image
   * of the source corpus — every token gets a per-copy suffix, ids get a
@@ -27,16 +25,15 @@ import org.apache.spark.sql.functions._
   *  - `disjoint` (default, the original behavior): EVERY token gets a
   *    `~copy` suffix. Maximally disjoint — but the suffix renames the
   *    Gopher stopwords and its `~` is a symbol under the q65 punct
-  *    rule, so the quality gate in `enforce` mode kills every copy>0
-  *    doc twice over (stops=0 AND punct≈n_tokens) — a fixture
-  *    artifact that forced the composed [[Pipeline]] to run its ×300/
-  *    ×1000 probes in `annotate` (shadow-gate) mode.
+  *    rule, so the quality gate kills every copy>0 doc twice over
+  *    (stops=0 AND punct≈n_tokens) — a fixture artifact that starves
+  *    every stage of the composed [[Pipeline]] past its gate.
   *  - `stopsafe`: non-stopword tokens get an ALPHANUMERIC `x<copy>`
   *    suffix; the [[graft.ext.TextAnalysis.stopAll]] stopwords pass
   *    through untouched. Measured on the sf0.1 corpus: n_tokens,
   *    punct, and stops are unchanged by construction, and the ≤4
   *    extra chars/token leave mean word length ≈8.5 < the 10 bar —
-  *    gate verdicts flip on 0/5000 docs, so `enforce` survivor counts
+  *    gate verdicts flip on 0/5000 docs, so the gate's survivor counts
   *    scale exactly ×copies. Disjointness still holds at the SHINGLE
   *    level, which is what the dedup/decontamination operators key
   *    on: a 5-gram crosses copies only if all five tokens are
@@ -58,12 +55,7 @@ object ScaleGen {
   val Stride = 100000000L
 
   def main(args: Array[String]): Unit =
-    if (args.headOption.contains("clustered"))
-      clustered(args(1), args(2).toLong,
-        args.lift(3).map(_.toInt).getOrElse(32),
-        args.lift(4).map(_.toInt).getOrElse(80) / 1000.0,
-        args.lift(5).map(_.toInt).getOrElse(350) / 1000.0)
-    else scaled(args(0), args(1), args(2).toInt, args.lift(3).getOrElse("disjoint"))
+    scaled(args(0), args(1), args(2).toInt, args.lift(3).getOrElse("disjoint"))
 
   def scaled(src: String, out: String, copies: Int, mode: String): Unit = {
     require(mode == "disjoint" || mode == "stopsafe",
@@ -147,52 +139,6 @@ object ScaleGen {
         s""","mode":"stopsafe","all_stop_windows":$allStopWindows"""
       else s""","mode":"disjoint""""
     println(s"""{"scalegen":"$out","copies":$copies,"src":"$src"$modeField}""")
-    spark.stop()
-  }
-
-  /** A deterministic CLUSTERED embedding corpus. The driver's test
-    * embeddings are uniform noise — the worst case for both the LSH init
-    * (hyperplane buckets carry no semantic locality) and NN-descent (a
-    * neighbor's neighbors are no likelier to be close than random
-    * draws) — so a kNN-graph dial priced on them alone may be mispriced
-    * for a real embedding corpus, which is clustered by construction
-    * (topics, templates, languages). This is a mixture of Gaussians: `k`
-    * centroids with hash-derived coordinates uniform in ±`amp`, each
-    * vector assigned a centroid by id hash and offset per dim by
-    * `sigma`·N(0,1) noise (Box–Muller over two hash-derived uniforms:
-    * same args, bit-identical corpus, no RNG state). The amplitude
-    * default matches the driver corpus (~±0.35), so quantization
-    * (`vec_qdot`'s 2²⁰ fixed point) and norms behave alike across the
-    * two fixtures and a sweep line differs only in STRUCTURE.
-    *
-    * Writes ONLY embeddings.parquet, schema-identical to the driver
-    * layout (vec_id BIGINT, embedding FLOAT[64], label INT; label = the
-    * true mixture component, so recall audits can also read cluster
-    * purity) — the one table `Scale knn` and [[ext.Similarity]] read.
-    */
-  def clustered(out: String, n: Long, k: Int, sigma: Double, amp: Double): Unit = {
-    val spark = GraftSession.local()
-
-    def u(seed: String, mod: Long): String =
-      // hash-derived uniform in (0, 1]: +1 keeps ln() off zero
-      s"(pmod(xxhash64(concat('$seed|', cast(vec_id as string), '|', cast(i as string))), ${mod}L) + 1) / $mod.0D"
-    val cent =
-      s"(pmod(xxhash64(concat('cent|', cast(label as string), '|', cast(i as string))), 2001L) - 1000) / 1000.0D * $amp"
-    val gauss =
-      s"sqrt(-2.0D * ln(${u("g1", 1048576L)})) * cos(6.283185307179586D * ${u("g2", 1048576L)})"
-
-    spark.range(n)
-      .select(
-        col("id").as("vec_id"),
-        expr(s"cast(pmod(xxhash64(concat('lab|', cast(id as string))), $k) as int)").as("label"))
-      .select(col("vec_id"), col("label"),
-        expr(s"transform(sequence(0, 63), i -> cast($cent + $sigma * $gauss as float))")
-          .as("embedding"))
-      .select("vec_id", "embedding", "label")
-      .repartition(32)
-      .write.mode("overwrite").parquet(s"$out/embeddings.parquet")
-
-    println(s"""{"clusteredgen":"$out","n":$n,"k":$k,"sigma":$sigma,"amp":$amp}""")
     spark.stop()
   }
 }

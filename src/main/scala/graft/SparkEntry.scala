@@ -5,8 +5,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
   * Every implemented operator from SURVEY.md §2 registers one entry in
-  * `queries` (Spark plan) and, when SQL-expressible, one in `oracleSql`
-  * (equivalent DuckDB SQL over the same parquet tables).
+  * `queries` (Spark plan) and one in `oracleSql` (equivalent DuckDB SQL
+  * over the same parquet tables).
   */
 object SparkEntry {
 
@@ -35,7 +35,7 @@ object SparkEntry {
     registry.map(q => q.name -> q.fn).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omitted for non-SQL-expressible ops. */
+    * the same parquet tables. */
   def oracleSql: Map[String, String] =
-    registry.flatMap(q => q.oracle.map(q.name -> _)).toMap
+    registry.map(q => q.name -> q.oracle).toMap
 }

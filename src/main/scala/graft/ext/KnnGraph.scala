@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{CacheScope, Q}
@@ -109,102 +109,62 @@ object KnnGraph {
         Window.partitionBy("v").orderBy(col("cos").desc, col("w"))))
       .filter(col("rank") <= k)
 
-  /** LSH multi-probe init candidates: each node × (own bucket + all
-    * hamming-1 buckets). The probe values are distinct by
-    * construction, so each (v, w) appears at most once — no distinct
-    * exchange needed. `planes` is the corpus-size dial — pass
-    * [[planesFor]](n) (the registered queries do) or an explicit
-    * sweep width; there is deliberately no default (r13 ADVICE: a
-    * fixed default width is the measured-fatal configuration).
+  /** Each node's probe buckets as a `pb` column over a relation with a
+    * `bucket` column: its own bucket plus all hamming-1 buckets. The
+    * probe values are distinct by construction, so each (v, w) pairs
+    * through at most one of them — no distinct exchange needed.
     */
-  /** Multi-probe relation (v, pb): each node × (own bucket + all
-    * hamming-1 probe buckets) over a bucketed corpus `nb(vec_id,
-    * bucket, …)`.
-    */
-  private def probesOf(nb: DataFrame, planes: Int): DataFrame =
-    nb.select(col("vec_id").as("v"), explode(expr(
-      s"transform(sequence(0, $planes), t -> CASE WHEN t = 0 THEN bucket" +
-        " ELSE bucket ^ shiftleft(cast(1 as bigint), t - 1) END)")).as("pb"))
+  private def probeBuckets(planes: Int): Column = explode(expr(
+    s"transform(sequence(0, $planes), t -> CASE WHEN t = 0 THEN bucket" +
+      " ELSE bucket ^ shiftleft(cast(1 as bigint), t - 1) END)")).as("pb")
 
+  /** LSH multi-probe init candidates, id pairs only: each node × (own
+    * bucket + all hamming-1 buckets) — the reference formulation
+    * [[initTopK]] is pinned against. `planes` is the corpus-size dial —
+    * pass [[planesFor]](n) (the registered queries do) or an explicit
+    * test width; there is deliberately no default (r13 ADVICE: a fixed
+    * default width is the measured-fatal configuration).
+    */
   private[graft] def initCand(e: DataFrame, planes: Int): DataFrame = {
     val nb = e.withColumn("bucket", expr(Similarity.lshBucketExpr(planes)))
-    probesOf(nb, planes).join(
+    nb.select(col("vec_id").as("v"), probeBuckets(planes)).join(
         nb.select(col("vec_id").as("w"), col("bucket").as("wb")),
         col("wb") === col("pb") && col("w") =!= col("v"))
       .select("v", "w")
   }
 
-  /** The LSH init's top-k — SINGLE-JOIN scoring, optionally SEGMENTED
-    * (r13 verdict ask #2 — the ×1000 story).
-    *
-    * Single-join scoring (r14, measured necessary): the naive shape —
-    * id-only pairs from [[initCand]] re-ranked by [[topK]] — attaches
-    * the two vectors with two hash joins, and past broadcast size the
-    * INTERMEDIATE between them (pair rows carrying v's 64-long qe)
-    * re-exchanges on w: ~550 B × every scored pair ≈ 90 GB of
-    * exchange+sort scratch at ×1000 — measured filling this host's
-    * disk twice (61 GB dead files with lazy cleanup; "No space left
-    * on device" with per-pass GC). Here the PROBES relation carries
-    * v's vector to the probe bucket ((p+1) copies of the corpus —
-    * ~19 GB at ×1000, 4–5× less than pair×vector) and the bucket side
-    * carries w's; one equi-join on pb = wb attaches both, cos is
-    * projected IN-STAGE, and only (v, w, cos) ever reaches the rank
-    * window — whose `filter(rank ≤ k)` triggers WindowGroupLimit, so
-    * map tasks keep ≤ k rows per node before the exchange. No
-    * pair-shaped relation carries a vector through any exchange.
-    *
-    * Segmentation (`segments` > 1): the probe relation is processed
-    * in SEQUENTIAL passes over probe-bucket residue classes
-    * (pb % segments), each pass re-ranked to its own top-k and
-    * EAGERLY materialized (localCheckpoint forces pass s to finish
-    * before pass s+1 plans), with an explicit per-pass GC so
-    * ContextCleaner actually releases the dead pass's shuffle files
-    * (a data-sized 48 g heap never GCs on its own under this
-    * workload — measured 61 GB of dead files without it), then the
-    * per-pass winners re-ranked once (≤ segments·k rows per node).
-    *
-    * EXACT in every configuration: the candidate set is identical to
-    * [[initCand]]'s (same probes, same bucket equi-join), a candidate
-    * pair (v, w) exists via exactly one probe value (probe values are
-    * distinct and w has one bucket), so residue classes PARTITION the
-    * candidate set and top-k of per-class top-ks is the global top-k
-    * (same (cos desc, id) order at both levels). KnnGraphSpec pins
-    * single-join ≡ the two-join formulation and segmented ≡ one-shot
-    * on the real corpus.
+  /** The LSH init's top-k with SINGLE-JOIN scoring (r14, measured
+    * necessary — the ×1000 story): the naive shape — id-only pairs from
+    * [[initCand]] re-ranked by [[topK]] — attaches the two vectors with
+    * two hash joins, and past broadcast size the INTERMEDIATE between
+    * them (pair rows carrying v's 64-long qe) re-exchanges on w:
+    * ~550 B × every scored pair ≈ 90 GB of exchange+sort scratch at
+    * ×1000 — measured filling the scratch disk twice. Here the PROBES
+    * relation carries v's vector to the probe bucket ((p+1) copies of
+    * the corpus — ~19 GB at ×1000, 4–5× less than pair×vector) and the
+    * bucket side carries w's; one equi-join on pb = wb attaches both,
+    * cos is projected IN-STAGE, and only (v, w, cos) ever reaches the
+    * rank window — whose `filter(rank ≤ k)` triggers WindowGroupLimit,
+    * so map tasks keep ≤ k rows per node before the exchange. No
+    * pair-shaped relation carries a vector through any exchange. The
+    * candidate set is [[initCand]]'s (same probes, same bucket
+    * equi-join); KnnGraphSpec pins single-join ≡ the two-join
+    * formulation on the real corpus.
     */
-  private[graft] def initTopK(
-      e: DataFrame, planes: Int, k: Int = K, segments: Int = 1): DataFrame = {
+  private[graft] def initTopK(e: DataFrame, planes: Int, k: Int = K): DataFrame = {
     val nb = e.withColumn("bucket", expr(Similarity.lshBucketExpr(planes)))
       .transform(CacheScope.scoped) // probe side + bucket side of the one join
     val wside = nb.select(col("vec_id").as("w"), col("qe").as("wqe"),
       col("nrm").as("wnrm"), col("bucket").as("wb"))
-    val probes = nb
-      .select(col("vec_id").as("v"), col("qe").as("vqe"), col("nrm").as("vnrm"),
+    nb.select(col("vec_id").as("v"), col("qe").as("vqe"), col("nrm").as("vnrm"),
         col("bucket"))
-      .select(col("v"), col("vqe"), col("vnrm"), explode(expr(
-        s"transform(sequence(0, $planes), t -> CASE WHEN t = 0 THEN bucket" +
-          " ELSE bucket ^ shiftleft(cast(1 as bigint), t - 1) END)")).as("pb"))
-    def scoredTopK(p: DataFrame): DataFrame = p
+      .select(col("v"), col("vqe"), col("vnrm"), probeBuckets(planes))
       .join(wside, col("wb") === col("pb") && col("w") =!= col("v"))
       .select(col("v"), col("w"),
         expr("cast(vec_ldot(vqe, wqe) as double) / (vnrm * wnrm)").as("cos"))
       .withColumn("rank", row_number().over(
         Window.partitionBy("v").orderBy(col("cos").desc, col("w"))))
       .filter(col("rank") <= k)
-    if (segments <= 1) scoredTopK(probes)
-    else {
-      val parts = (0 until segments).map { s =>
-        val part = CacheScope.checkpointed(
-          scoredTopK(probes.filter(pmod(col("pb"), lit(segments.toLong)) === s))
-            .select("v", "w", "cos"))
-        System.gc()
-        part
-      }
-      parts.reduce(_.unionAll(_))
-        .withColumn("rank", row_number().over(
-          Window.partitionBy("v").orderBy(col("cos").desc, col("w"))))
-        .filter(col("rank") <= k)
-    }
   }
 
   /** One NN-descent candidate expansion over a graph `g(v, w, cos)`:
@@ -256,16 +216,8 @@ object KnnGraph {
     * exchange) is exact, and the rank window matches [[topK]]'s
     * (cos desc, id) order — KnnGraphSpec pins pivot-scored ≡ the
     * roundCand+topK reference formulation row-for-row.
-    *
-    * `segments` > 1 processes pivot residue classes (u % segments) in
-    * sequential eagerly-materialized passes (the [[initTopK]]
-    * discipline, incl. the per-pass GC): a cross-class duplicate
-    * survives its per-pass top-k (it competes against a subset there)
-    * and the final groupBy+re-rank dedupes it, so segmentation is
-    * exact here too.
     */
-  private[graft] def roundTopK(
-      e: DataFrame, g: DataFrame, k: Int = K, segments: Int = 1): DataFrame = {
+  private[graft] def roundTopK(e: DataFrame, g: DataFrame, k: Int = K): DataFrame = {
     val rev = g.select(col("w").as("rv"), col("v").as("rw"), col("cos"))
       .withColumn("rr", row_number().over(
         Window.partitionBy("rv").orderBy(col("cos").desc, col("rw"))))
@@ -282,37 +234,21 @@ object KnnGraph {
         col("nrm").as("wnrm")), "w")
     val eu = e.select(col("vec_id").as("u"), col("qe").as("uqe"),
       col("nrm").as("unrm"))
-    def rank(scored: DataFrame): DataFrame = scored
+    val twoHop = left.join(right, "u")
+      .filter(col("w") =!= col("x"))
+      .select(col("x").as("v"), col("w"),
+        expr("cast(vec_ldot(xqe, wqe) as double) / (xnrm * wnrm)").as("cos"))
+    val direct = left.join(eu, "u")
+      .select(col("x").as("v"), col("u").as("w"),
+        expr("cast(vec_ldot(xqe, uqe) as double) / (xnrm * unrm)").as("cos"))
+    twoHop.unionAll(direct)
       .groupBy("v", "w").agg(max("cos").as("cos"))
       .withColumn("rank", row_number().over(
         Window.partitionBy("v").orderBy(col("cos").desc, col("w"))))
       .filter(col("rank") <= k)
-    def scoredOf(lf: DataFrame, rt: DataFrame): DataFrame = {
-      val twoHop = lf.join(rt, "u")
-        .filter(col("w") =!= col("x"))
-        .select(col("x").as("v"), col("w"),
-          expr("cast(vec_ldot(xqe, wqe) as double) / (xnrm * wnrm)").as("cos"))
-      val direct = lf.join(eu, "u")
-        .select(col("x").as("v"), col("u").as("w"),
-          expr("cast(vec_ldot(xqe, uqe) as double) / (xnrm * unrm)").as("cos"))
-      twoHop.unionAll(direct)
-    }
-    if (segments <= 1) rank(scoredOf(left, right))
-    else {
-      val parts = (0 until segments).map { s =>
-        val part = CacheScope.checkpointed(
-          rank(scoredOf(
-            left.filter(pmod(col("u"), lit(segments.toLong)) === s),
-            right.filter(pmod(col("u"), lit(segments.toLong)) === s)))
-            .select("v", "w", "cos"))
-        System.gc()
-        part
-      }
-      rank(parts.reduce(_.unionAll(_)))
-    }
   }
 
-  /** g₀ .. g₍rounds₎ over an nv-shaped relation. Each round is
+  /** g₀ .. g₍ᵣ₎, r = [[Rounds]], over an nv-shaped relation. Each round is
     * localCheckpointed (query-scoped), NOT merely persisted (r15,
     * measured): a round's logical plan embeds the previous round's
     * subtree ~6 times (b = g ∪ rev feeds left/right/twoHop/direct), so
@@ -324,9 +260,9 @@ object KnnGraph {
     * loop paid it ~6× = 85 s on a 35-edge relation). The checkpoint
     * truncates each round to a LogicalRDD leaf: plans stay
     * constant-size at any round count, execution unchanged (the same
-    * law as components()' label rounds and the segmented init's
-    * passes). g₍ᵣ₋₁₎ still feeds BOTH the next round's expansion and
-    * (in q176) the per-round audit union from memory.
+    * law as components()' label rounds). g₍ᵣ₋₁₎ still feeds BOTH the
+    * next round's expansion and (in q176) the per-round audit union
+    * from memory.
     */
   // `planes` has NO default on purpose (r13 ADVICE): 6 is the exact
   // fixed width measured corpus-quadratic-fatal at ×30 — callers must
@@ -344,90 +280,15 @@ object KnnGraph {
   // action (~5 AQE stage jobs at bench scale) per query. Callers with
   // two independent downstream actions (q176's per-round audit) keep
   // the default.
-  private[graft] def descend(e: DataFrame, planes: Int,
-      rounds: Int = Rounds, k: Int = K, segments: Int = 1,
+  private[graft] def descend(e: DataFrame, planes: Int, k: Int = K,
       checkpointLast: Boolean = true): Seq[DataFrame] = {
-    val g0 = CacheScope.checkpointed(initTopK(e, planes, k, segments))
-    (1 to rounds).foldLeft(Vector(g0)) { (gs, r) =>
-      val next = roundTopK(e, gs.last, k, segments)
-      gs :+ (if (r == rounds && !checkpointLast) next
+    val g0 = CacheScope.checkpointed(initTopK(e, planes, k))
+    (1 to Rounds).foldLeft(Vector(g0)) { (gs, r) =>
+      val next = roundTopK(e, gs.last, k)
+      gs :+ (if (r == Rounds && !checkpointLast) next
              else CacheScope.checkpointed(next))
     }
   }
-
-  /** Hamming-2 probe harvest on the FINAL re-rank only (the r14 ask-#5
-    * candidate arm, named in the verdict): after the descent, each
-    * node probes the C(planes, 2) buckets at hamming distance 2 from
-    * its own — the shell the init's hamming-1 probes never see — and
-    * the harvested candidates re-rank together with the built graph's
-    * edges. Init and rounds are untouched; the arm's cost is its own
-    * pairing term n · C(p,2) · (n/2^p) — ~C(p,2)/(p+1) times the init's
-    * (×2.1 at p=6, ×7 at p=16), priced by `Scale knn` (the `h2` finisher). Single-join
-    * discipline throughout (no pair-shaped relation carries a vector
-    * through an exchange — the probes side carries v's vector, the
-    * bucket side w's, cos projected in-stage, WindowGroupLimit before
-    * the rank exchange).
-    */
-  private[graft] def h2Rerank(
-      e: DataFrame, g: DataFrame, planes: Int, k: Int = K): DataFrame = {
-    val masks = (for {
-      i <- 0 until planes; j <- (i + 1) until planes
-    } yield (1L << i) | (1L << j)).mkString(", ")
-    val nb = e.withColumn("bucket", expr(Similarity.lshBucketExpr(planes)))
-      .transform(CacheScope.scoped)
-    val wside = nb.select(col("vec_id").as("w"), col("qe").as("wqe"),
-      col("nrm").as("wnrm"), col("bucket").as("wb"))
-    val probes = nb
-      .select(col("vec_id").as("v"), col("qe").as("vqe"),
-        col("nrm").as("vnrm"),
-        explode(expr(s"transform(array($masks), m -> bucket ^ m)")).as("pb"))
-    val harvested = probes
-      .join(wside, col("wb") === col("pb") && col("w") =!= col("v"))
-      .select(col("v"), col("w"),
-        expr("cast(vec_ldot(vqe, wqe) as double) / (vnrm * wnrm)").as("cos"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy("v").orderBy(col("cos").desc, col("w"))))
-      .filter(col("rank") <= k)
-      .select("v", "w", "cos")
-    harvested.unionAll(g.select("v", "w", "cos"))
-      .groupBy("v", "w").agg(max("cos").as("cos"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy("v").orderBy(col("cos").desc, col("w"))))
-      .filter(col("rank") <= k)
-  }
-
-  /** Init-bucket occupancy skew — the r15 verdict ask-#7 clusteredness
-    * probe behind the `auto` recall-arm selection: the mean bucket
-    * occupancy a random node EXPERIENCES (Σc²/n over bucket sizes c)
-    * divided by the uniform-multinomial expectation n/2^planes. A
-    * uniform corpus hashes near the expectation (skew ≈ 1–2, measured
-    * 1.41 on the sf0.1 driver corpus); a clustered mixture
-    * concentrates whole clusters into shared sign-buckets (skew ≫ 1,
-    * measured 21.8 on the `ScaleGen clustered` 600k fixture) — and the
-    * h2 harvest only pays on the UNIFORM side (`Scale knn` r15: +0.154
-    * recall uniform vs +0.012 clustered at ~2× the init term). One
-    * (bucket → count) aggregate over ids; no vectors move, and the
-    * buckets are the SAME relation the init pass computes anyway — as
-    * a standalone probe it costs one corpus scan of the qe column
-    * (measured 0.5 s at 600k vectors, noise against the 100+ s build).
-    */
-  private[graft] def occupancySkew(e: DataFrame, planes: Int): Double = {
-    val row = e.withColumn("bucket", expr(Similarity.lshBucketExpr(planes)))
-      .groupBy("bucket").agg(count(lit(1)).as("c"))
-      .agg(sum(expr("c * c")).as("ss"), sum(col("c")).as("n")).first()
-    val ss = row.getLong(0).toDouble
-    val n = row.getLong(1).toDouble
-    (ss / n) / (n / (1L << planes).toDouble)
-  }
-
-  /** Skew bar for the `auto` arm: below it the corpus reads as
-    * uniform-ish (h2 pays), above it as clustered (h2 is ×2 init cost
-    * for +0.01 recall — skip). Pinned at the geometric midpoint of the
-    * two measured fixtures (1.41 uniform, 21.8 clustered — a 15×
-    * gap, so any bar in [2, 10] makes the same calls; 5.5 ≈
-    * √(1.41·21.8) sits maximally far from both).
-    */
-  val H2SkewThreshold = 5.5
 
   // ── HNSW-style layered index (r15 verdict ask #2: the third declared
   // consumer of the kNN graph — q181 search + q182 recall audit) ──────

@@ -509,9 +509,8 @@ object Similarity {
     * in [-1000, 1000], identical to [[planesDuck]] at the registered
     * width of 6). Shared by q47 (multi-probe ANN) and the q175/q176
     * kNN-graph init; `planes` is the corpus-size dial (more planes →
-    * smaller buckets; production raises it so bucket size stays
-    * ~constant — `Scale knn` measures the dial, the registered queries
-    * pin 6).
+    * smaller buckets; the kNN graph raises it with corpus size so
+    * bucket size stays ~constant — [[KnnGraph.planesFor]]; q47 pins 6).
     */
   private[graft] def lshBucketExpr(planes: Int = 6): String = {
     def planeArr(j: Int): String = "array(" + (1 to 64).map { i =>

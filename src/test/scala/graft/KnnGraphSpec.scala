@@ -27,6 +27,13 @@ class KnnGraphSpec extends AnyFunSuite {
   private def q(name: String, dir: String): DataFrame =
     SparkEntry.queries(name)(spark, dir)
 
+  /** (v, w, ⌊cos·10⁶⌋, rank) rows of a ranked edge relation. */
+  private def canon(df: DataFrame): Set[(Long, Long, Long, Int)] =
+    df.select(col("v"), col("w"), expr("cast(floor(cos * 1000000.0D) as bigint)"),
+        col("rank"))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getInt(3)))
+      .toSet
+
   test("dial laws: planesFor holds bucket size ~32; modFor holds the sample ~500") {
     // exact pins at the corpus sizes the gates and soaks use
     assert(ext.KnnGraph.planesFor(500) === 6)      // sf0.01 → q47-compatible
@@ -71,59 +78,34 @@ class KnnGraphSpec extends AnyFunSuite {
     CacheScope.drain()
   }
 
-  test("segmented init is EXACTLY the one-shot init (any segment count)") {
-    // the ×1000 bounded-scratch path must not be an approximation:
-    // probe residue classes partition the candidate set, so top-k of
-    // the per-class top-ks is the global top-k — pinned row-for-row
-    // on the real corpus at two segment counts (one of them not a
-    // divisor of the bucket count, so classes are uneven)
+  test("single-join init is EXACTLY the two-join topK(initCand) reference") {
+    // the single-join scoring (vectors attached in ONE bucket equi-join
+    // — the r14 scratch fix) must be a pure plan change: pinned
+    // row-for-row on the real corpus against the two-join formulation
+    // it replaced
     val e = ext.Similarity.nv(spark, "/root/testdata/sf0.001")
       .select("vec_id", "qe", "nrm").transform(CacheScope.scoped)
     val planes = ext.KnnGraph.planesFor(e.count())
-    def rows(segments: Int): Set[(Long, Long, Long, Int)] =
-      ext.KnnGraph.initTopK(e, planes, segments = segments)
-        .select(col("v"), col("w"), expr("cast(floor(cos * 1000000.0D) as bigint)"),
-          col("rank"))
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getInt(3)))
-        .toSet
-    val oneShot = rows(1)
-    assert(oneShot.nonEmpty)
-    assert(rows(4) === oneShot, "4-segment init diverged from one-shot")
-    assert(rows(7) === oneShot, "7-segment init diverged from one-shot")
-    // and the single-join scoring (vectors attached in ONE bucket
-    // equi-join — the r14 scratch fix) is exactly the two-join
-    // formulation it replaced
-    val twoJoin = ext.KnnGraph.topK(e, ext.KnnGraph.initCand(e, planes))
-      .select(col("v"), col("w"), expr("cast(floor(cos * 1000000.0D) as bigint)"),
-        col("rank"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getInt(3)))
-      .toSet
-    assert(twoJoin === oneShot, "single-join init diverged from the two-join formulation")
+    val oneJoin = canon(ext.KnnGraph.initTopK(e, planes))
+    assert(oneJoin.nonEmpty)
+    val twoJoin = canon(ext.KnnGraph.topK(e, ext.KnnGraph.initCand(e, planes)))
+    assert(twoJoin === oneJoin, "single-join init diverged from the two-join formulation")
     CacheScope.drain()
   }
 
-  test("pivot-scored round is EXACTLY the roundCand+topK reference (any segment count)") {
+  test("pivot-scored round is EXACTLY the roundCand+topK reference") {
     // the r14 round-scoring rework (no pair-shaped exchange carries a
     // vector) must be a pure plan change: same candidates, same cos,
-    // same ranks — pinned on a real g0 at 1, 3, and 5 pivot segments
+    // same ranks — pinned on a real g0
     val e = ext.Similarity.nv(spark, "/root/testdata/sf0.001")
       .select("vec_id", "qe", "nrm").transform(CacheScope.scoped)
     val planes = ext.KnnGraph.planesFor(e.count())
     val g0 = ext.KnnGraph.initTopK(e, planes).transform(CacheScope.scoped)
-    def canon(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Long, Int)] =
-      df.select(col("v"), col("w"), expr("cast(floor(cos * 1000000.0D) as bigint)"),
-          col("rank"))
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getInt(3)))
-        .toSet
     val reference = canon(
       ext.KnnGraph.topK(e, ext.KnnGraph.roundCand(g0)))
     assert(reference.nonEmpty)
     assert(canon(ext.KnnGraph.roundTopK(e, g0)) === reference,
       "pivot-scored round diverged from roundCand+topK")
-    assert(canon(ext.KnnGraph.roundTopK(e, g0, segments = 3)) === reference,
-      "3-segment pivot round diverged")
-    assert(canon(ext.KnnGraph.roundTopK(e, g0, segments = 5)) === reference,
-      "5-segment pivot round diverged")
     CacheScope.drain()
   }
 
@@ -344,32 +326,5 @@ class KnnGraphSpec extends AnyFunSuite {
       s"shifted graph must shift the bar, got $bar2")
     // fallback on an empty graph: the frozen fixture constant
     assert(KnnGraph.derivedCosBar(g.filter(col("cos") > 9.0), k = 1) === 0.47)
-  }
-
-  test("occupancySkew separates clustered from uniform; the h2 auto bar sits between") {
-    import spark.implicits._
-    import ext.KnnGraph
-    // deterministic fixtures, 2000 vectors × 64 dims at the q47 width
-    val rnd = new scala.util.Random(7)
-    def vec() = Array.fill(64)((rnd.nextDouble() * 2 - 1).toFloat)
-    val uniform = (0 until 2000).map(i => (i.toLong, vec()))
-    val cents = Array.fill(4)(vec())
-    val clustered = (0 until 2000).map { i =>
-      val c = cents(i % 4)
-      (i.toLong, c.map(x => x + (rnd.nextDouble() * 0.02 - 0.01).toFloat))
-    }
-    functions.VectorExpressions.register(spark)
-    def skewOf(rows: Seq[(Long, Array[Float])]): Double = {
-      val df = rows.toDF("vec_id", "embedding")
-        .select(col("vec_id"), expr(ext.Similarity.qeSpark).as("qe"))
-      KnnGraph.occupancySkew(df, planes = 6)
-    }
-    val su = skewOf(uniform)
-    val sc = skewOf(clustered)
-    assert(su < KnnGraph.H2SkewThreshold,
-      s"uniform corpus must read uniform: skew $su")
-    assert(sc > KnnGraph.H2SkewThreshold,
-      s"4-cluster corpus must read clustered: skew $sc")
-    assert(sc > 2 * su, s"separation collapsed: uniform $su vs clustered $sc")
   }
 }
